@@ -1,11 +1,10 @@
 """One-ahead lane prefetch: run a lane's ordered jobs, building the NEXT
 prefetchable job's batch frame (its dedup + hashdiff shuffle — the merge's
 one full-table exchange, which reads no table state) on a side thread
-while the current job's head/hist writes run. Shared by the transcript
-vault's laned replay (streaming/runner.py) and the generic Pipe's laned
-replay (plans/pipe.py) so the pipelining invariant lives in one place:
-at most one extra cached frame is alive, and a failed merge never leaks
-the in-flight prefetched frame.
+while the current job's head/hist writes run. Driven by the per-batch
+lane chain of ``Pipe._replay_laned`` (plans/pipe.py), the one replay
+orchestrator; the invariant lives here: at most one extra cached frame is
+alive, and a failed merge never leaks the in-flight prefetched frame.
 
 A job is *prefetchable* when its callable exposes ``prepare`` (build +
 persist the batch frame; safe on a side thread because it touches no

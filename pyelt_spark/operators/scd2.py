@@ -299,8 +299,8 @@ class Scd2Merge:
         ``affected_buckets``: optional precomputed bucket list (any SUPERSET
         of the batch's true buckets is correct — it only widens the pruned
         head read). A replay loop computes every batch's buckets in one job
-        up front (streaming/runner.py), removing a per-batch driver-blocking
-        job from the merge critical path.
+        up front (``Pipe.replay``), removing a per-batch blocking collect
+        from the merge critical path.
 
         ``prepared``: optional prefetched batch frame from
         ``prepare_batch`` (same events slice); adopted only if the recipe

@@ -17,10 +17,16 @@ microbatch. Differences are Spark-first, not semantic:
   every downstream merge).
 * hub / sat / link merges for one part run CONCURRENTLY (disjoint tables,
   one shared deduped batch) — the reference's serial FK-writeback loop
-  does not exist because surrogate keys are hashes.
+  does not exist because surrogate keys are hashes. Without hooks,
+  validations or view promotions no part boundary is observable, and
+  every sor-fed merge of a batch runs concurrently.
 * every merge is idempotent per (table, batch_id), so a crash anywhere
-  inside ``run`` resumes exactly-once by re-running the batch (the same
-  property TranscriptVault has; tested by the torn-vault tests).
+  inside ``run`` resumes exactly-once by re-running the batch (tested by
+  the torn-vault tests).
+
+``Pipe.run`` (one batch) and ``Pipe.replay`` (a bounded stream, per-table
+lanes) are the engine's one commit and replay path: the transcript vault's
+``apply_batch`` and ``MicrobatchRunner.replay`` delegate to them.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ import os
 from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +70,17 @@ def _window_sized(spark, total_rows: int) -> bool:
     return total_rows <= per_core * max(spark.sparkContext.defaultParallelism, 1)
 
 
+def _where(df: DataFrame, conds: list[str]) -> DataFrame:
+    """``df`` filtered on all of the SQL predicates ``conds`` in ONE filter:
+    every DataFrame op and every Column built is a py4j round trip (a
+    filter also an analysis pass), which a tail commit pays per target."""
+    return df.filter(" AND ".join(f"({c})" for c in conds)) if conds else df
+
+
+def _not_null(col: str) -> str:
+    return f"`{col}` IS NOT NULL"
+
+
 def _union(frames: list[DataFrame], allow_missing: bool = True) -> DataFrame:
     """Fold per-mapping frames into one (multiple mappings targeting one
     table write through a single job — single-writer commit protocol).
@@ -73,6 +90,18 @@ def _union(frames: list[DataFrame], allow_missing: bool = True) -> DataFrame:
     for f in frames[1:]:
         u = u.unionByName(f, allowMissingColumns=allow_missing)
     return u
+
+
+class _Target(NamedTuple):
+    """One merge of a run: a table, its merge and the frame feeding it (the
+    union of every mapping that targets the table)."""
+
+    name: str
+    table: Any  # LakeTable | Scd2Table
+    merge: Any  # HubMerge | LinkMerge | Scd2Merge
+    frame: DataFrame
+    snapshot: bool = False  # snapshot sat: never skipped, never windowed
+    probe: bool = True  # bucket-probed by replay (not snapshots/valuesets)
 
 
 # --------------------------------------------------------------------------
@@ -143,6 +172,15 @@ class EntityViewToLinkMapping:
     type_expr: str | None = None
 
 
+# the mapping type that feeds each merge part (valuesets: SorToValueSetMapping)
+_PART_MAPPINGS = {
+    "hubs": SorToEntityMapping,
+    "views": EntityViewToEntityMapping,
+    "links": SorToLinkMapping,
+    "viewlinks": EntityViewToLinkMapping,
+}
+
+
 # --------------------------------------------------------------------------
 # pipe
 # --------------------------------------------------------------------------
@@ -194,6 +232,7 @@ class Pipe:
         self.links: "OrderedDict[type[LinkEntity], LakeTable]" = OrderedDict()
         self.link_merges: dict[type[LinkEntity], LinkMerge] = {}
         self.valuesets: dict[str, LakeTable] = {}
+        self.valueset_merges: dict[str, HubMerge] = {}
 
         for m in mappings:
             if isinstance(m, (SorToEntityMapping, EntityViewToEntityMapping)):
@@ -273,6 +312,13 @@ class Pipe:
         if name not in self.valuesets:
             self.valuesets[name] = LakeTable(
                 self.spark, os.path.join(self.root, f"valueset_{name}"), self.num_buckets
+            )
+            self.valueset_merges[name] = HubMerge(
+                business_keys=["valueset_naam", "code"],
+                hub_type=f"valueset_{name}",
+                ts_col=self.ts_col,
+                source_system=self.source_system,
+                carry_cols=["omschrijving"],
             )
 
     # ---------------------------------------------------------------- hooks
@@ -416,10 +462,8 @@ class Pipe:
             batch = batch.withColumn(tgt, F.expr(expr))
         return batch
 
-    def _upserts(self, batch: DataFrame) -> DataFrame:
-        if self.op_col and self.op_col in batch.columns:
-            return batch.filter(F.col(self.op_col) != "D")
-        return batch
+    def _upsert_conds(self, cols: list[str]) -> list[str]:
+        return [f"`{self.op_col}` <> 'D'"] if self.op_col and self.op_col in cols else []
 
     def run(
         self,
@@ -432,93 +476,99 @@ class Pipe:
         """Apply one microbatch through the part sequence (pipeline.py:657:
         ``run(parts=['sor','valuesets','hubs','links','views','viewlinks'])``).
         ``batch`` may be None when only view parts run. ``affected``
-        optionally maps table name → precomputed bucket superset (see
-        ``replay`` — removes the per-table bucket-discovery job)."""
+        optionally maps sor-fed table name → precomputed bucket superset
+        (see ``replay`` — removes the per-table bucket-discovery job; ``[]``
+        skips a provably empty merge).
+
+        Where lanes apply (``_laneable``) no hook can observe a part
+        boundary and every merge reads only the batch and its own table,
+        so the valueset, hub/sat and link merges are submitted together."""
         parts = ALL_PARTS if parts is None else parts
-        self._affected = affected or {}
+        affected = affected or {}
         out: dict[str, Any] = {"batch_id": batch_id, "parts": list(parts)}
         run_rec = self._runs_start(batch_id, parts)
-        staged = batch
+        if self._laneable(parts):
+            # each merge re-scans the batch: caching it for all merges to
+            # share measured a LOSS at 16M events on pinned local[8] (153 s →
+            # 174 s replay) — columnar re-scans are cheap, a deserialized
+            # cache costs fill time and GC pressure
+            if batch is not None:
+                jobs = self._jobs(self._sor_targets(batch, parts), batch_id, affected, lineage)
+                out.update(self._run_jobs(jobs))
+            self._runs_finish(run_rec, out)
+            return out
 
+        staged = batch
         if "sor" in parts and batch is not None:
             self._fire("before_sor", batch, batch_id)
             # staging is declarative: mappings project/filter lazily off the
             # one batch; nothing materializes until a merge runs. Declared
             # row validations ARE a stage here: invalid rows are quarantined
             # and the merges below only ever see the valid remainder.
-            staged = batch
             if self.validations:
                 staged = self._validate_sor(staged, batch_id, out)
             self._fire("after_sor", staged, batch_id)
 
-        if "valuesets" in parts and staged is not None:
-            self._fire("before_valuesets", staged, batch_id)
-            out.update(self._run_jobs(self._valueset_jobs(staged, batch_id)))
-            self._fire("after_valuesets", staged, batch_id)
-
-        if "hubs" in parts and staged is not None:
-            self._fire("before_hubs", staged, batch_id)
-            # N mappings may feed ONE table (two source shapes into one
-            # entity, or subtype entities sharing a hub): group by target
-            # and UNION the projections — per-table tables are single-writer
-            # and idempotent per batch_id, so two concurrent jobs on one
-            # table would race and the loser's rows would silently drop
-            inputs = [
-                (m, self._project(staged, m.field_map, m.filter))
-                for m in self.mappings
-                if isinstance(m, SorToEntityMapping)
-            ]
-            out.update(self._run_jobs(self._grouped_entity_jobs(inputs, batch_id, lineage)))
-            self._fire("after_hubs", staged, batch_id)
-
-        if "views" in parts:
-            self._fire("before_views", staged, batch_id)
+        for part in ALL_PARTS[1:]:
+            view = part in ("views", "viewlinks")
+            if part not in parts or (staged is None and not view):
+                continue
+            self._fire(f"before_{part}", staged, batch_id)
             # precomputed buckets describe the SOR batch, not view output —
             # view promotions always discover their own buckets
-            sor_affected, self._affected = self._affected, {}
-            inputs = [
-                (m, self._as_upsert_events(m.view(self), batch_id))
-                for m in self.mappings
-                if isinstance(m, EntityViewToEntityMapping)
-            ]
-            if inputs:
-                out.update(
-                    self._run_jobs(self._grouped_entity_jobs(inputs, batch_id, lineage))
-                )
-            self._affected = sor_affected
-            self._fire("after_views", staged, batch_id)
-
-        if "links" in parts and staged is not None:
-            self._fire("before_links", staged, batch_id)
-            link_evs: dict = {}
-            for m in self.mappings:
-                if not isinstance(m, SorToLinkMapping):
-                    continue
-                ev = self._project(staged, m.field_map, m.filter)
-                link_evs.setdefault(m.link, []).append(
-                    self._link_input(m.link, ev, m.type_expr)
-                )
-            out.update(self._run_jobs(self._link_jobs(link_evs, batch_id)))
-            self._fire("after_links", staged, batch_id)
-
-        if "viewlinks" in parts:
-            self._fire("before_viewlinks", staged, batch_id)
-            sor_affected, self._affected = self._affected, {}
-            link_evs = {}
-            for m in self.mappings:
-                if isinstance(m, EntityViewToLinkMapping):
-                    ev = self._as_upsert_events(m.view(self), batch_id)
-                    link_evs.setdefault(m.link, []).append(
-                        self._link_input(m.link, ev, m.type_expr)
-                    )
-            out.update(self._run_jobs(self._link_jobs(link_evs, batch_id)))
-            self._affected = sor_affected
-            self._fire("after_viewlinks", staged, batch_id)
+            targets = self._part_targets(part, staged, batch_id)
+            jobs = self._jobs(targets, batch_id, {} if view else affected, lineage)
+            out.update(self._run_jobs(jobs))
+            self._fire(f"after_{part}", staged, batch_id)
 
         self._runs_finish(run_rec, out)
         return out
 
-    # ----------------------------------------------------------------- jobs
+    # -------------------------------------------------------------- targets
+
+    def _sor_targets(
+        self, frame: DataFrame, parts: list[str], batch_col: str | None = None
+    ) -> list[_Target]:
+        """Every sor-fed merge target of ``parts``, in part order."""
+        return [
+            t
+            for part in ("valuesets", "hubs", "links")
+            if part in parts
+            for t in self._part_targets(part, frame, None, batch_col)
+        ]
+
+    def _part_targets(
+        self,
+        part: str,
+        staged: DataFrame | None,
+        batch_id: int | None,
+        batch_col: str | None = None,
+    ) -> list[_Target]:
+        """The merge targets one part feeds. N mappings may feed ONE table
+        (two source shapes into one entity, subtype entities sharing a hub,
+        two mappings into one valueset): their frames are UNIONED per target
+        table — tables are single-writer and idempotent per batch_id, so two
+        merges of one table and batch would race or drop the second."""
+        if part == "valuesets":
+            return self._valueset_targets(staged, batch_col)
+        feeds = [m for m in self.mappings if isinstance(m, _PART_MAPPINGS[part])]
+        if part in ("hubs", "views"):
+            return self._entity_targets(
+                [(m, self._mapping_frame(m, staged, batch_id)) for m in feeds]
+            )
+        link_evs: "OrderedDict[type[LinkEntity], list[DataFrame]]" = OrderedDict()
+        for m in feeds:
+            ev = self._mapping_frame(m, staged, batch_id)
+            link_evs.setdefault(m.link, []).append(self._link_input(m.link, ev, m.type_expr))
+        return [
+            _Target(le.__dbname__, self.links[le], self.link_merges[le], _union(frames))
+            for le, frames in link_evs.items()
+        ]
+
+    def _mapping_frame(self, m: Any, staged: DataFrame | None, batch_id: int | None) -> DataFrame:
+        if isinstance(m, (EntityViewToEntityMapping, EntityViewToLinkMapping)):
+            return self._as_upsert_events(m.view(self), batch_id)
+        return self._project(staged, m.field_map, m.filter)
 
     def _entity_inputs(
         self,
@@ -530,7 +580,8 @@ class Pipe:
         """One mapping's contribution: (hub owner, upsert frame) plus
         per-sat (name, keyed frame, snapshot?) inputs."""
         owner = entity.__entity_owner__
-        hub_ev = self._upserts(ev)
+        cols = ev.columns
+        hub_ev = _where(ev, self._upsert_conds(cols))
         if entity.__subtype__:
             # subtype entity sharing the owner's hub: its rows register in
             # the SHARED hub with type=<subtype> so downstream queries can
@@ -548,24 +599,16 @@ class Pipe:
             # a mapping loads only the sats its source can key: a batch
             # without a sat's grain columns skips that sat entirely
             # (reference: per-sat field mappings, sor_to_entity)
-            if any(c not in ev.columns for c in need):
+            if any(c not in cols for c in need):
                 continue
-            sev = ev
-            if isinstance(sat, type) and issubclass(sat, HybridSat):
-                sev = sev.filter(F.col("type").isNotNull())
             # rows missing any grain column can't key this sat — skip them
-            for c in need:
-                sev = sev.filter(F.col(c).isNotNull())
-            sat_inputs.append((name, sev, snapshot))
+            conds = [_not_null(c) for c in need]
+            if isinstance(sat, type) and issubclass(sat, HybridSat):
+                conds.insert(0, _not_null("type"))
+            sat_inputs.append((name, _where(ev, conds), snapshot))
         return hub_input, sat_inputs
 
-    def _grouped_entity_jobs(
-        self,
-        inputs: list[tuple[Any, DataFrame]],
-        batch_id: int,
-        lineage: dict[str, Any] | None,
-    ) -> list[tuple[str, Callable[[], dict]]]:
-        """Union per-mapping frames per TARGET table, one job per table."""
+    def _entity_targets(self, inputs: list[tuple[Any, DataFrame]]) -> list[_Target]:
         hub_evs: "OrderedDict[type[HubEntity], list[DataFrame]]" = OrderedDict()
         sat_evs: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
         sat_snap: dict[str, set[bool]] = {}
@@ -577,82 +620,28 @@ class Pipe:
             for name, sev, snap in sats_in:
                 sat_evs.setdefault(name, []).append(sev)
                 sat_snap.setdefault(name, set()).add(snap)
-
-        aff = getattr(self, "_affected", {})
-
-        def _skip(name: str) -> bool:
-            # [] = the replay probe proved this batch feeds the table no
-            # rows (None = unknown → run the merge with self-discovery)
-            return aff.get(name) == []
-
-        jobs: list[tuple[str, Callable[[], dict]]] = []
-        for owner, frames in hub_evs.items():
-            if _skip(owner.__hub_name__):
-                jobs.append(
-                    (owner.__hub_name__, lambda b=batch_id: {"skipped_empty_batch": b})
-                )
-                continue
-            jobs.append(
-                (
-                    owner.__hub_name__,
-                    lambda t=self.hubs[owner], m=self.hub_merges[owner], e=_union(frames),
-                    a=aff.get(owner.__hub_name__): m.apply_batch(t, e, batch_id, a),
-                )
-            )
+        targets = [
+            _Target(o.__hub_name__, self.hubs[o], self.hub_merges[o], _union(frames))
+            for o, frames in hub_evs.items()
+        ]
         for name, frames in sat_evs.items():
             if len(sat_snap[name]) > 1:
                 raise ValueError(
                     f"sat {name}: mixing snapshot and change-stream mappings "
                     "in one run is ambiguous (snapshot claims completeness)"
                 )
-            if sat_snap[name] == {True}:
-                from pyelt_spark.operators.scd2 import apply_snapshot
+            snapshot = sat_snap[name] == {True}
+            targets.append(
+                _Target(
+                    name, self.sats[name], self.sat_merges[name], _union(frames),
+                    snapshot=snapshot, probe=not snapshot,
+                )
+            )
+        return targets
 
-                jobs.append(
-                    (
-                        name,
-                        lambda t=self.sats[name], m=self.sat_merges[name], e=_union(frames):
-                        apply_snapshot(t, m, e, batch_id, lineage=lineage),
-                    )
-                )
-            else:
-                # NEVER skip a snapshot sat on an empty batch (above): an
-                # empty snapshot claims completeness and closes every row
-                if _skip(name):
-                    jobs.append((name, lambda b=batch_id: {"skipped_empty_batch": b}))
-                    continue
-                t, m, e, a = (
-                    self.sats[name],
-                    self.sat_merges[name],
-                    _union(frames),
-                    aff.get(name),
-                )
-                fn = lambda t=t, m=m, e=e, a=a: m.apply_batch(
-                    t, e, batch_id, lineage=lineage, affected_buckets=a
-                )
-                # one-ahead prefetch hooks for the laned replay: the sat's
-                # batch-side frame (dedup + hashdiff, the merge's one full
-                # shuffle) reads no table state, so a lane can materialize
-                # batch N+1's frame while batch N writes (_replay_laned).
-                # Already-committed batches (torn-crash resume) get no hooks:
-                # apply_batch skips them before touching the frame, so a
-                # prefetch would be a wasted full shuffle (ADVICE r5)
-                if batch_id in t.committed_batch_ids():
-                    jobs.append((name, fn))
-                    continue
-                fn.prepare = lambda t=t, m=m, e=e: m.prepare_batch(t, e)
-                fn.apply_prepared = lambda prep, t=t, m=m, e=e, a=a: m.apply_batch(
-                    t, e, batch_id, lineage=lineage, affected_buckets=a, prepared=prep
-                )
-                jobs.append((name, fn))
-        return jobs
-
-    def _valueset_jobs(
-        self, staged: DataFrame, batch_id: int
-    ) -> list[tuple[str, Callable[[], dict]]]:
-        """One job per valueset TABLE, per-mapping frames unioned — two
-        mappings feeding one valueset must not apply as two merges of the
-        same batch_id (the second would be dropped by idempotence)."""
+    def _valueset_targets(
+        self, staged: DataFrame, batch_col: str | None = None
+    ) -> list[_Target]:
         by_name: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
         for m in self.mappings:
             if not isinstance(m, SorToValueSetMapping):
@@ -664,29 +653,20 @@ class Pipe:
                     F.expr(m.code).cast("string").alias("code"),
                     F.expr(m.descr).cast("string").alias("omschrijving"),
                     F.col(self.ts_col),
+                    *([F.col(batch_col)] if batch_col else []),
                 )
                 .filter(F.col("code").isNotNull())
             )
             by_name.setdefault(m.valueset_name, []).append(vs)
-        jobs: list[tuple[str, Callable[[], dict]]] = []
-        for name, frames in by_name.items():
-            u = _union(frames, allow_missing=False)
-            merge = HubMerge(
-                business_keys=["valueset_naam", "code"],
-                hub_type=f"valueset_{name}",
-                ts_col=self.ts_col,
-                source_system=self.source_system,
-                carry_cols=["omschrijving"],
+        # valuesets are never probed: an unfed registry still commits every
+        # batch, so it always has a manifest (and schema) to read
+        return [
+            _Target(
+                f"valueset_{name}", self.valuesets[name], self.valueset_merges[name],
+                _union(frames, allow_missing=False), probe=False,
             )
-            jobs.append(
-                (
-                    f"valueset_{name}",
-                    lambda t=self.valuesets[name], m2=merge, e=u: m2.apply_batch(
-                        t, e, batch_id
-                    ),
-                )
-            )
-        return jobs
+            for name, frames in by_name.items()
+        ]
 
     def _link_input(
         self,
@@ -694,46 +674,73 @@ class Pipe:
         ev: DataFrame,
         type_expr: str | None,
     ) -> DataFrame:
-        ev = self._upserts(ev)
         link = link_entity.__link__
         if issubclass(link, HybridLink):
             ev = ev.withColumn("type", F.expr(type_expr or "'default'"))
+        cols = ev.columns
         # a link row needs every TYPED leg key present (null-legged
         # associations are not associations; reference links FK-join through
         # hub ids) — dynamic legs are optional per row (dv.py:136-137)
-        required = [c for r in link.cls_get_link_refs().values() for c in r.key_cols]
-        for c in required:
-            if c in ev.columns:
-                ev = ev.filter(F.col(c).isNotNull())
-        return ev
+        required = [
+            c for r in link.cls_get_link_refs().values() for c in r.key_cols if c in cols
+        ]
+        return _where(ev, self._upsert_conds(cols) + [_not_null(c) for c in required])
 
-    def _link_jobs(
-        self, link_evs: dict, batch_id: int
+    # ----------------------------------------------------------------- jobs
+
+    def _jobs(
+        self,
+        targets: list[_Target],
+        batch_id: int,
+        affected: dict[str, list[int]],
+        lineage: dict[str, Any] | None = None,
     ) -> list[tuple[str, Callable[[], dict]]]:
-        """One job per link table, per-mapping frames unioned (same
-        single-writer rationale as _grouped_entity_jobs)."""
-        jobs = []
-        for link_entity, frames in link_evs.items():
-            u = _union(frames)
-            aff = getattr(self, "_affected", {}).get(link_entity.__dbname__)
-            if aff == []:  # probe proved the batch feeds this link nothing
-                jobs.append(
-                    (link_entity.__dbname__, lambda b=batch_id: {"skipped_empty_batch": b})
-                )
-                continue
-            jobs.append(
-                (
-                    link_entity.__dbname__,
-                    lambda t=self.links[link_entity], m=self.link_merges[link_entity],
-                    e=u, a=aff: m.apply_batch(t, e, batch_id, a),
-                )
+        return [(t.name, self._job(t, batch_id, affected.get(t.name), lineage)) for t in targets]
+
+    def _job(
+        self,
+        t: _Target,
+        batch_id: int,
+        aff: list[int] | None,
+        lineage: dict[str, Any] | None = None,
+    ) -> Callable[[], dict]:
+        """One target's merge of one batch. ``aff == []``: the replay probe
+        proved the batch feeds the table no rows, so the merge is skipped
+        with zero Spark jobs (None = unknown → the merge discovers its own
+        buckets)."""
+        if t.snapshot:
+            # NEVER skip a snapshot sat on an empty batch: an empty
+            # snapshot claims completeness and closes every row
+            from pyelt_spark.operators.scd2 import apply_snapshot
+
+            return lambda: apply_snapshot(t.table, t.merge, t.frame, batch_id, lineage=lineage)
+        if aff == []:
+            return lambda: {"skipped_empty_batch": batch_id}
+        if not isinstance(t.merge, Scd2Merge):
+            return lambda: t.merge.apply_batch(t.table, t.frame, batch_id, aff)
+
+        def fn(prepared: dict | None = None) -> dict:
+            return t.merge.apply_batch(
+                t.table, t.frame, batch_id, lineage=lineage, affected_buckets=aff,
+                prepared=prepared,
             )
-        return jobs
+
+        # one-ahead prefetch hooks for a replay lane: the sat's batch-side
+        # frame (dedup + hashdiff, the merge's one full shuffle) reads no
+        # table state, so a lane can materialize batch N+1's frame while
+        # batch N writes (operators/prefetch.py). Already-committed batches
+        # (torn-crash resume) get no hooks: apply_batch skips them before
+        # touching the frame, so a prefetch would be a wasted full shuffle
+        # (ADVICE r5)
+        if batch_id not in t.table.committed_batch_ids():
+            fn.prepare = lambda: t.merge.prepare_batch(t.table, t.frame)
+            fn.apply_prepared = fn
+        return fn
 
     def _run_jobs(self, jobs: list[tuple[str, Callable[[], dict]]]) -> dict[str, Any]:
         if not jobs:
             return {}
-        with ThreadPoolExecutor(max_workers=min(len(jobs), 8)) as pool:
+        with ThreadPoolExecutor(max_workers=min(len(jobs), 16)) as pool:
             futs = [(name, pool.submit(fn)) for name, fn in jobs]
             return {name: f.result() for name, f in futs}
 
@@ -761,22 +768,29 @@ class Pipe:
     def link_table(self, link_entity: type[LinkEntity]) -> LakeTable:
         return self.links[link_entity]
 
+    @staticmethod
+    def _compact(table: LakeTable | Scd2Table, max_dirs_per_bucket: int = 16) -> None:
+        """Small-file maintenance of ONE table: append-mode tables (hubs,
+        links, valuesets, sat histories) gain one dir per touched bucket
+        per batch; compact any bucket whose manifest references more than
+        ``max_dirs_per_bucket`` dirs (and fold crowded MoR sat heads).
+        Manifest inspection is in-memory — zero cost when nothing is
+        fragmented."""
+        if isinstance(table, Scd2Table):
+            table.hist.compact_if_crowded(max_dirs_per_bucket)
+            table.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
+        else:
+            table.compact_if_crowded(max_dirs_per_bucket)
+
     def maintain(self, max_dirs_per_bucket: int = 16) -> None:
-        """Small-file maintenance across every compiled table: append-mode
-        tables (hubs, links, valuesets, sat histories) gain one dir per
-        touched bucket per batch; compact any bucket whose manifest
-        references more than ``max_dirs_per_bucket`` dirs. Manifest
-        inspection is in-memory — zero cost when nothing is fragmented."""
-        tables = (
-            list(self.hubs.values())
-            + list(self.links.values())
-            + list(self.valuesets.values())
-            + [s.hist for s in self.sats.values()]
-        )
-        for t in tables:
-            t.compact_if_crowded(max_dirs_per_bucket)
-        for s in self.sats.values():
-            s.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
+        """``_compact`` across every compiled table."""
+        for t in (
+            *self.hubs.values(),
+            *self.links.values(),
+            *self.valuesets.values(),
+            *self.sats.values(),
+        ):
+            self._compact(t, max_dirs_per_bucket)
 
     def replay(
         self,
@@ -784,158 +798,83 @@ class Pipe:
         batch_col: str = "batch_id",
         parts: list[str] | None = None,
     ) -> list[dict]:
-        """Replay a change stream batch-by-batch in batch order (the
-        multi-entity analog of TranscriptVault.replay).
+        """Replay a change stream batch-by-batch in batch order.
 
-        Like the transcript runner, ONE up-front job computes every batch's
-        affected buckets for every sor-fed table (a superset per table —
-        mapping filters are applied, null-key rows just widen the read), so
-        the per-batch merges skip their bucket-discovery collects.
+        ONE up-front probe job (``_probe``) finds every batch id and, per
+        sor-fed table, the buckets each batch touches, so the merges skip
+        their bucket-discovery collects — and a probed table with no hits
+        in a batch provably gets no input rows there, so its merge is
+        skipped outright with zero Spark jobs. In a real CDC fan-out most
+        tables are untouched by most microbatches, so this is the
+        steady-state fast path, not an edge case.
 
-        The same probe doubles as an EMPTY-BATCH detector: a table whose
-        every feeding mapping was probed and whose probe found no buckets in
-        a batch provably has no input rows there (hash keys are never null,
-        so the probe is a superset), and its merge is skipped outright —
-        zero Spark jobs. In a real CDC fan-out most tables are untouched by
-        most microbatches, so this is the steady-state fast path, not an
-        edge case. ``events`` is persisted for the replay (every mapping's
-        projection and every batch filter re-reads it)."""
+        Where lanes apply (``_laneable``) the replay runs per-table lanes
+        (``_replay_laned``); otherwise it falls back to the serial
+        per-batch ``run`` loop, compacting after every batch."""
+        parts = ALL_PARTS if parts is None else parts
+        targets = self._sor_targets(events, parts, batch_col)
+        ids, affected, rows_per = self._probe(events, batch_col, targets)
+        if self._laneable(parts):
+            return self._replay_laned(batch_col, targets, ids, affected, rows_per, parts)
+        out = []
+        for b in ids:
+            out.append(
+                self.run(
+                    events.filter(F.col(batch_col) == b), b, parts=parts, affected=affected[b]
+                )
+            )
+            self.maintain()
+        return out
+
+    def _probe(
+        self, events: DataFrame, batch_col: str, targets: list[_Target]
+    ) -> tuple[list[int], dict[int, dict[str, list[int]]], dict[tuple[int, str], int]]:
+        """One aggregation over the stream: the batch ids, each batch's
+        bucket list per probed table (``affected[b][table]``; ``[]`` proves
+        an empty input — hash keys are never null, so each list is a
+        superset) and each (batch, table)'s input row count for the window
+        volume gate. Snapshot sats and valuesets are not probed. The raw
+        stream rides along as one more branch (table null), so batch-id
+        discovery shares the probe job. ``events`` is not persisted: in
+        traced perfbench catch-up runs (5k events, 4 vCPUs) a persisted
+        stream cost the probe 5 jobs and 0.34 executor CPU-s, re-scans
+        2 jobs and 0.25-0.30 CPU-s."""
         from pyelt_spark.functions.hashing import hash_key
         from pyelt_spark.storage.lake import bucket_expr
 
-        probe_frames = []
-        probed: set[str] = set()  # tables every feeding mapping probed
-        unknown: set[str] = set()  # tables some feeding mapping could NOT probe
-        own_persist = not (
-            events.storageLevel.useMemory or events.storageLevel.useDisk
-        )
-        if own_persist:
-            events = events.persist()
-        for m in self.mappings:
-            if isinstance(m, SorToEntityMapping):
-                ev = self._project(events, m.field_map, m.filter)
-                owner = m.entity.__entity_owner__
-                probes = []
-                if all(c in ev.columns for c in owner.__bk__):
-                    probed.add(owner.__hub_name__)
-                    probes.append(
-                        F.struct(
-                            F.lit(owner.__hub_name__).alias("t"),
-                            bucket_expr(
-                                hash_key(*owner.__bk__), self.hubs[owner].num_buckets
-                            ).alias("k"),
-                        )
-                    )
-                else:
-                    unknown.add(owner.__hub_name__)
-                for name in (m.sats or m.entity.__sats__):
-                    mg = self.sat_merges[name]
-                    if any(c not in ev.columns for c in mg.business_keys):
-                        # no probe — but a mapping missing the sat's grain
-                        # columns doesn't FEED that sat either
-                        # (_entity_inputs skips it), so probed-empty from
-                        # the other mappings still implies empty input
-                        continue
-                    probed.add(name)
-                    probes.append(
-                        F.struct(
-                            F.lit(name).alias("t"),
-                            bucket_expr(
-                                hash_key(*mg.business_keys), self.sats[name].num_buckets
-                            ).alias("k"),
-                        )
-                    )
-                if probes:
-                    probe_frames.append(
-                        ev.select(
-                            F.col(batch_col).alias("_b"),
-                            F.explode(F.array(*probes)).alias("s"),
-                        )
-                    )
-            elif isinstance(m, SorToLinkMapping):
-                ev = self._project(events, m.field_map, m.filter)
-                mg = self.link_merges[m.link]
-                if issubclass(m.link.__link__, HybridLink):
-                    ev = ev.withColumn("type", F.expr(m.type_expr or "'default'"))
-                if any(c not in ev.columns for c in mg.business_keys):
-                    unknown.add(m.link.__dbname__)
-                    continue
-                probed.add(m.link.__dbname__)
-                probe = F.struct(
-                    F.lit(m.link.__dbname__).alias("t"),
-                    bucket_expr(
-                        hash_key(*mg.business_keys), self.links[m.link].num_buckets
-                    ).alias("k"),
-                )
-                probe_frames.append(
-                    ev.select(
-                        F.col(batch_col).alias("_b"), F.explode(F.array(probe)).alias("s")
-                    )
-                )
-        affected: dict[int, dict[str, list[int]]] = {}
-        # the raw stream rides along as one more probe branch (t/k null), so
-        # batch-id discovery shares the probe job — one action over the
-        # stream instead of two (guide §1.2: fewer passes; the runner's
-        # replay has always fused these)
-        probe_frames.append(
+        probed = [
+            t for t in targets
+            if t.probe and all(c in t.frame.columns for c in t.merge.business_keys)
+        ]
+        frames = [
             events.select(
                 F.col(batch_col).alias("_b"),
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit(None).cast("string").alias("t"),
-                            F.lit(None).cast("int").alias("k"),
-                        )
-                    )
-                ).alias("s"),
+                F.lit(None).cast("string").alias("t"),
+                F.lit(None).cast("int").alias("k"),
             )
-        )
-        allp = probe_frames[0]
-        for pf in probe_frames[1:]:
-            allp = allp.unionByName(pf)
+        ] + [
+            t.frame.select(
+                F.col(batch_col).alias("_b"),
+                F.lit(t.name).alias("t"),
+                bucket_expr(hash_key(*t.merge.business_keys), t.table.num_buckets).alias("k"),
+            )
+            for t in probed
+        ]
         rows = (
-            allp.select("_b", F.col("s.t").alias("t"), F.col("s.k").alias("k"))
+            _union(frames, allow_missing=False)
             .groupBy("_b", "t", "k")
             .agg(F.count("*").alias("n"))
             .collect()
         )
-        ids = sorted({r["_b"] for r in rows})
+        ids = sorted({int(r["_b"]) for r in rows})
+        affected = {b: {t.name: [] for t in probed} for b in ids}
         rows_per: dict[tuple[int, str], int] = {}
         for r in rows:
-            if r["k"] is not None:
-                affected.setdefault(int(r["_b"]), {}).setdefault(r["t"], []).append(
-                    int(r["k"])
-                )
-                key = (int(r["_b"]), r["t"])
-                rows_per[key] = rows_per.get(key, 0) + int(r["n"])
-        # a fully-probed table with no probe hits in a batch has provably no
-        # input rows there: record the empty bucket list so the batch's
-        # merge for that table is skipped without any Spark job
-        fully_probed = probed - unknown
-        for b in ids:
-            slot = affected.setdefault(int(b), {})
-            for t in fully_probed:
-                slot.setdefault(t, [])
-        try:
-            if self._laneable(parts):
-                out = self._replay_laned(
-                    events, batch_col, ids, affected, parts, rows_per
-                )
-            else:
-                out = [
-                    self.run(
-                        events.filter(F.col(batch_col) == b),
-                        int(b),
-                        parts=parts,
-                        affected=affected.get(int(b)),
-                    )
-                    for b in ids
-                ]
-        finally:
-            if own_persist:
-                events.unpersist()
-        self.maintain()
-        return out
+            if r["t"] is not None:
+                b = int(r["_b"])
+                affected[b][r["t"]].append(int(r["k"]))
+                rows_per[(b, r["t"])] = rows_per.get((b, r["t"]), 0) + int(r["n"])
+        return ids, affected, rows_per
 
     def _laneable(self, parts: list[str] | None) -> bool:
         """Laned replay applies when every target table's batch chain is
@@ -959,12 +898,12 @@ class Pipe:
 
     def _replay_laned(
         self,
-        events: DataFrame,
         batch_col: str,
-        ids: list,
+        targets: list[_Target],
+        ids: list[int],
         affected: dict[int, dict[str, list[int]]],
-        parts: list[str] | None,
-        rows_per: dict[tuple[int, str], int] | None = None,
+        rows_per: dict[tuple[int, str], int],
+        parts: list[str],
     ) -> list[dict]:
         """Per-TABLE lanes over the batch sequence: each table applies its
         batches in order on its own sequential chain, and all chains run
@@ -973,180 +912,75 @@ class Pipe:
         table), so the per-batch cross-table barrier of the serial loop is
         pure wasted wall-clock; dropping it takes the replay from
         Σ_batches max_tables(latency) to max_tables Σ_batches(latency).
+
+        Resume: a batch every table has committed (or provably gets
+        nothing from) is skipped whole — no lane work, no run record.
         Each merge stays individually idempotent per (table, batch_id), so
-        a crash — which can now leave DIFFERENT tables at different
-        batches — still resumes exactly-once by re-running the replay.
-        Run-registry records are started per batch up front and finished
-        as the outputs assemble; a crash leaves every unfinished batch
+        a crash — which can leave DIFFERENT tables at different batches —
+        still resumes exactly-once by re-running the replay. Run-registry
+        records are started per pending batch up front and finished as
+        the outputs assemble; a crash leaves every unfinished batch
         'running' (torn-run forensics unchanged)."""
-        parts_l = ALL_PARTS if parts is None else parts
-        batch_ids = [int(b) for b in ids]
+        committed = {t.name: t.table.committed_batch_ids() for t in targets}
         outs: dict[int, dict[str, Any]] = {
-            b: {"batch_id": b, "parts": list(parts_l)} for b in batch_ids
+            b: {"batch_id": b, "skipped_duplicate_batch": b}
+            for b in ids
+            if all(b in committed[t.name] or affected[b].get(t.name) == [] for t in targets)
         }
-        lanes: "OrderedDict[str, list[tuple[int, Callable[[], dict]]]]" = OrderedDict()
-        run_recs: list[str] = []
-        for b in batch_ids:
-            self._affected = affected.get(b) or {}
-            batch = events.filter(F.col(batch_col) == b)
-            jobs: list[tuple[str, Callable[[], dict]]] = []
-            if "valuesets" in parts_l:
-                jobs += self._valueset_jobs(batch, b)
-            if "hubs" in parts_l:
-                inputs = [
-                    (m, self._project(batch, m.field_map, m.filter))
-                    for m in self.mappings
-                    if isinstance(m, SorToEntityMapping)
-                ]
-                jobs += self._grouped_entity_jobs(inputs, b, None)
-            if "links" in parts_l:
-                link_evs: dict = {}
-                for m in self.mappings:
-                    if isinstance(m, SorToLinkMapping):
-                        ev = self._project(batch, m.field_map, m.filter)
-                        link_evs.setdefault(m.link, []).append(
-                            self._link_input(m.link, ev, m.type_expr)
-                        )
-                jobs += self._link_jobs(link_evs, b)
-            run_recs.append(self._runs_start(b, parts_l))
-            for name, fn in jobs:
-                lanes.setdefault(name, []).append((b, fn))
-        # job closures captured their batch's map at build time; reset the
-        # instance attribute so a later run() on this Pipe starts clean
-        # (ADVICE r5)
-        self._affected = {}
+        pending = [b for b in ids if b not in outs]
+        if not pending:
+            return [outs[b] for b in ids]
+        run_recs = {}
+        for b in pending:
+            outs[b] = {"batch_id": b, "parts": list(parts)}
+            run_recs[b] = self._runs_start(b, parts)
 
-        # WINDOW-COALESCED lane inputs: each table's whole pending id
-        # sequence can apply as ONE closed-form pass (apply_batches) —
-        # the mapping projections are batch-independent, so projecting the
-        # full stream and letting the window merge slice by batch id is
-        # identical to the per-batch unions. Snapshot-mapped sats keep the
-        # per-batch path (a snapshot batch claims completeness per batch).
-        win_calls: dict[str, Callable[[list[int], list[int]], dict | None]] = {}
-        if "hubs" in parts_l:
-            hub_w: "OrderedDict[type[HubEntity], list[DataFrame]]" = OrderedDict()
-            sat_w: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
-            sat_snap_w: dict[str, set[bool]] = {}
-            for mp in self.mappings:
-                if not isinstance(mp, SorToEntityMapping):
-                    continue
-                ev_w = self._project(events, mp.field_map, mp.filter)
-                hub_in, sats_in = self._entity_inputs(
-                    mp.entity, ev_w, mp.sats, getattr(mp, "snapshot", False)
-                )
-                hub_w.setdefault(hub_in[0], []).append(hub_in[1])
-                for sname, sev, snap in sats_in:
-                    sat_w.setdefault(sname, []).append(sev)
-                    sat_snap_w.setdefault(sname, set()).add(snap)
-            for owner, frames in hub_w.items():
-                win_calls[owner.__hub_name__] = (
-                    lambda ids_t, aff_t, t=self.hubs[owner], mg=self.hub_merges[owner],
-                    e=_union(frames): mg.apply_batches(
-                        t, e, batch_col, ids_t, affected_buckets=aff_t
-                    )
-                )
-            for sname, frames in sat_w.items():
-                if sat_snap_w.get(sname) == {False}:
-                    win_calls[sname] = (
-                        lambda ids_t, aff_t, t=self.sats[sname],
-                        mg=self.sat_merges[sname], e=_union(frames):
-                        mg.apply_batches(
-                            t, e, batch_col, ids_t, affected_buckets=aff_t
-                        )
-                    )
-        if "links" in parts_l:
-            link_w: dict = {}
-            for mp in self.mappings:
-                if isinstance(mp, SorToLinkMapping):
-                    ev_w = self._project(events, mp.field_map, mp.filter)
-                    link_w.setdefault(mp.link, []).append(
-                        self._link_input(mp.link, ev_w, mp.type_expr)
-                    )
-            for le, frames in link_w.items():
-                win_calls[le.__dbname__] = (
-                    lambda ids_t, aff_t, t=self.links[le], mg=self.link_merges[le],
-                    e=_union(frames): mg.apply_batches(
-                        t, e, batch_col, ids_t, affected_buckets=aff_t
-                    )
-                )
-        if "valuesets" in parts_l:
-            vs_w: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
-            for mp in self.mappings:
-                if not isinstance(mp, SorToValueSetMapping):
-                    continue
-                vs = (
-                    self._project(events, {}, mp.filter)
-                    .select(
-                        F.lit(mp.valueset_name).alias("valueset_naam"),
-                        F.expr(mp.code).cast("string").alias("code"),
-                        F.expr(mp.descr).cast("string").alias("omschrijving"),
-                        F.col(self.ts_col),
-                        F.col(batch_col),
-                    )
-                    .filter(F.col("code").isNotNull())
-                )
-                vs_w.setdefault(mp.valueset_name, []).append(vs)
-            for vname, frames in vs_w.items():
-                from pyelt_spark.operators.hubs import HubMerge
-
-                mg = HubMerge(
-                    business_keys=["valueset_naam", "code"],
-                    hub_type=f"valueset_{vname}",
-                    ts_col=self.ts_col,
-                    source_system=self.source_system,
-                    carry_cols=["omschrijving"],
-                )
-                win_calls[f"valueset_{vname}"] = (
-                    lambda ids_t, aff_t, t=self.valuesets[vname], mg=mg,
-                    e=_union(frames, allow_missing=False): mg.apply_batches(
-                        t, e, batch_col, ids_t, affected_buckets=aff_t
-                    )
-                )
-
-        def _run_lane(name: str) -> None:
+        def lane(t: _Target) -> None:
             # window path first: the lane's whole pending sequence in one
-            # pass; fall back to the one-ahead per-batch chain when the
-            # closed form refuses (merge-on-read, out-of-order seqs,
-            # snapshot mappings have no window call at all)
-            win = win_calls.get(name)
-            if win is not None:
-                ids_t = [b for b in batch_ids if (affected.get(b) or {}).get(name) != []]
-                # unprobed tables (valuesets, unprobeable mappings) have no
-                # bucket evidence — None lets the window merge discover its
-                # own buckets; [] would wrongly publish an empty manifest
-                probed_any = any(name in (affected.get(b) or {}) for b in batch_ids)
-                if probed_any and not _window_sized(
-                    self.spark,
-                    sum((rows_per or {}).get((b, name), 0) for b in ids_t),
-                ):
-                    win = None
+            # closed-form pass (the mapping projections are batch-independent,
+            # so the window merge slicing the full stream by batch id is
+            # identical to the per-batch frames); fall back to the one-ahead
+            # per-batch chain when the volume gate or the closed form refuses
+            # (merge-on-read, out-of-order seqs) — snapshot sats claim
+            # completeness per batch and never window
+            probed = t.name in affected[pending[0]]
+            ids_t = [b for b in pending if affected[b].get(t.name) != []]
+            if not t.snapshot and (
+                not probed
+                or _window_sized(self.spark, sum(rows_per.get((b, t.name), 0) for b in ids_t))
+            ):
+                # unprobed tables have no bucket evidence — None lets the
+                # window merge discover its own buckets; [] would wrongly
+                # publish an empty manifest
                 aff_t = (
-                    sorted(
-                        {
-                            k
-                            for b in batch_ids
-                            for k in ((affected.get(b) or {}).get(name) or [])
-                        }
-                    )
-                    if probed_any
-                    else None
+                    sorted({k for b in pending for k in affected[b][t.name]}) if probed else None
                 )
-                res = win(ids_t, aff_t) if win is not None else None
+                res = t.merge.apply_batches(
+                    t.table, t.frame, batch_col, ids_t, affected_buckets=aff_t
+                )
                 if res is not None:
-                    for b in batch_ids:
-                        outs[b][name] = res.get(b, {"skipped_empty_batch": b})
+                    for b in pending:
+                        outs[b][t.name] = res.get(b, {"skipped_empty_batch": b})
+                    self._compact(t.table)  # lane-scoped: once per window
                     return
 
             def emit(b: int, out: dict) -> None:
-                outs[b][name] = out
+                outs[b][t.name] = out
+                # lane-scoped maintenance: a lane compacts only ITS table (a
+                # cross-lane compaction would violate the tables'
+                # single-writer commit protocol mid-replay)
+                self._compact(t.table)
 
-            run_lane_one_ahead(lanes[name], emit)
+            run_lane_one_ahead(
+                [
+                    (b, self._job(t._replace(frame=t.frame.filter(F.col(batch_col) == b)), b,
+                                  affected[b].get(t.name)))
+                    for b in pending
+                ],
+                emit,
+            )
 
-        if lanes:
-            with ThreadPoolExecutor(max_workers=min(len(lanes), 16)) as pool:
-                futs = [pool.submit(_run_lane, name) for name in lanes]
-                for f in futs:
-                    f.result()
-        for rec, b in zip(run_recs, batch_ids):
-            self._runs_finish(rec, outs[b])
-        return [outs[b] for b in batch_ids]
+        self._run_jobs([(t.name, lambda t=t: lane(t)) for t in targets])
+        for b in pending:
+            self._runs_finish(run_recs[b], outs[b])
+        return [outs[b] for b in ids]

@@ -1,23 +1,25 @@
 """The transcript vault pipeline — Pipeline/Pipe analog.
 
-Orchestrates the per-microbatch DAG of the reference's ``Pipe.run``
-(pyelt/pipeline.py:657-744): staging → hubs → sats → links, re-expressed
-as three independent merges off ONE deduped batch (hash surrogate keys
-remove the reference's sequential FK-writeback, SURVEY §3 entry point 2):
+Declares the transcript domain and runs it through the generic ``Pipe``
+(plans/pipe.py, the reference's ``Pipe.run``, pyelt/pipeline.py:657-744):
+staging → hubs → sats → links, re-expressed as three independent merges
+off ONE batch (hash surrogate keys remove the reference's sequential
+FK-writeback, SURVEY §3 entry point 2):
 
 * ``conversation_hub``  — insert-only distinct conv_id (dv.py:48-51)
-* ``turn_sat``          — SCD2 history of (conv_id, turn_idx) payload
+* ``conversation_sat_turn`` — SCD2 history of (conv_id, turn_idx) payload
                           (role, text, tool), hashdiff change detection,
                           delete tombstones (dv.py:55-62, ddl.py:334-348)
 * ``conversation_tool_link`` — insert-only (conv_id, tool) association
                           (dv.py:88-96)
 
-plus a ``runs`` bookkeeping log (sys.runs analog, dwh.py:115-147) kept in
+plus the pipe's ``_runs/`` registry (sys.runs analog, dwh.py:115-147) and
 each table's commit manifests.
 """
 
 from __future__ import annotations
 
+import copy
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,10 +67,11 @@ class TranscriptVault:
     """Hub/sat/link vault over a transcript change-event stream.
 
     The tables and merges are COMPILED from the declared domain above by
-    the generic ``Pipe`` (one SorToEntityMapping + one SorToLinkMapping);
-    this class only adds the transcript-specific batch policy (additive
-    payload evolution from unseen event columns) and the tuned three-way
-    concurrent submit the benchmark exercises."""
+    the generic ``Pipe`` (one SorToEntityMapping + one SorToLinkMapping),
+    which also runs every commit and replay; this class only adds the
+    transcript-specific batch policy (additive payload evolution from
+    unseen event columns, ``_pipe_for``) and reports results under the
+    ``hub``/``sat``/``link`` keys."""
 
     def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32,
                  mor: bool = False):
@@ -112,85 +115,36 @@ class TranscriptVault:
         ]
         return replace(self.sat_merge, payload_cols=payload_cols)
 
-    def apply_batch(
-        self,
-        events: DataFrame,
-        batch_id: int,
-        lineage: dict[str, Any] | None = None,
-        affected: dict[str, list[int]] | None = None,
-    ) -> dict[str, Any]:
-        """One microbatch: dedup once, then hub / sat / link merges.
+    def _pipe_for(self, events: DataFrame) -> Pipe:
+        """Per-call view of the pipe whose turn-sat merge is
+        ``batch_sat_merge(events)``; the shared pipe is never mutated."""
+        pipe = copy.copy(self.pipe)
+        pipe.sat_merges = {
+            **self.pipe.sat_merges,
+            Conversation.Turn.__dbname__: self.batch_sat_merge(events),
+        }
+        return pipe
 
-        Idempotent per batch_id on every table (exactly-once replay).
-        """
-        sat_merge = self.batch_sat_merge(events)
+    def _table_keys(self, out: dict[str, Any]) -> dict[str, Any]:
+        """Pipe output with the vault's table names as ``hub``/``sat``/``link``."""
+        names = {
+            Conversation.__hub_name__: "hub",
+            Conversation.Turn.__dbname__: "sat",
+            ConversationToolLink.__dbname__: "link",
+        }
+        return {names.get(k, k): v for k, v in out.items()}
 
-        # NOTE (measured at 16M events, pinned local[8]): caching the batch
-        # so the three merges share one materialization is a LOSS (153 s →
-        # 174 s replay) — the per-table parquet re-scans are columnar and
-        # cheap, while a 4M-row deserialized cache costs fill time and GC
-        # pressure. Keep the three scans.
-
-        # hub/link are registries of every key EVER seen upserting — they feed
-        # from raw upsert events (a turn created and deleted inside one batch
-        # still registers its conversation); the sat merge dedups internally
-        upserts = events.filter(F.col("op") != "D") if "op" in events.columns else events
-
-        # the three merges touch disjoint tables and all derive from the same
-        # batch — submit them concurrently (Spark's scheduler interleaves the
-        # jobs; on a cluster this overlaps three shuffle/write pipelines)
-        from concurrent.futures import ThreadPoolExecutor
-
-        # [] (vs None = unknown) means the replay probe proved this batch
-        # feeds the table no rows (hash keys are never null, so the probe
-        # is a superset) — skip that merge with zero Spark jobs. In steady
-        # state the link sees this whenever a batch carries no tool turns.
-        aff = affected or {}
-        skipped = {"skipped_empty_batch": batch_id}
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_hub = None if aff.get("hub") == [] else pool.submit(
-                self.hub_merge.apply_batch, self.hub, upserts, batch_id,
-                aff.get("hub"),
-            )
-            f_sat = None if aff.get("sat") == [] else pool.submit(
-                sat_merge.apply_batch, self.sat, events, batch_id, lineage or {},
-                aff.get("sat"),
-            )
-            f_link = None if aff.get("link") == [] else pool.submit(
-                self.link_merge.apply_batch,
-                self.link,
-                upserts.filter(F.col("tool").isNotNull()),
-                batch_id,
-                aff.get("link"),
-            )
-            out = {
-                "hub": f_hub.result() if f_hub else skipped,
-                "sat": f_sat.result() if f_sat else skipped,
-                "link": f_link.result() if f_link else skipped,
-            }
+    def apply_batch(self, events: DataFrame, batch_id: int) -> dict[str, Any]:
+        """One microbatch through ``Pipe.run``: the hub, sat and link merges
+        run concurrently, then small-file maintenance. Idempotent per
+        batch_id on every table (exactly-once replay)."""
+        out = self._pipe_for(events).run(events, batch_id)
         self.maintain()
-        return out
+        return self._table_keys(out)
 
     def maintain(self, max_dirs_per_bucket: int = 16) -> None:
-        """Small-file maintenance: append-mode tables (hub/link, sat history)
-        gain one dir per touched bucket per batch; compact any bucket whose
-        manifest references more than ``max_dirs_per_bucket`` dirs. Manifest
-        inspection is in-memory — zero cost when nothing is fragmented."""
-        for t in (self.hub, self.link, self.sat.hist):
-            t.compact_if_crowded(max_dirs_per_bucket)
-        self.sat.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
-
-    def replay(self, events: DataFrame, batch_col: str = "batch_id") -> list[dict]:
-        """Replay a full change stream batch-by-batch in batch order."""
-        batch_ids = [
-            r[0] for r in events.select(batch_col).distinct().orderBy(batch_col).collect()
-        ]
-        out = []
-        for b in batch_ids:
-            out.append(
-                self.apply_batch(events.filter(F.col(batch_col) == b), int(b))
-            )
-        return out
+        """Small-file maintenance of the hub, link and sat (``Pipe.maintain``)."""
+        self.pipe.maintain(max_dirs_per_bucket)
 
     # ----------------------------------------------------------------- views
 
@@ -234,7 +188,3 @@ class TranscriptVault:
                 F.col(s.revision).alias("last_revision"),
             )
         )
-
-    def runs_log(self) -> list[dict]:
-        """sys.runs analog: merge metrics of every committed batch."""
-        return [c.metrics for c in self.sat.commits() if c.batch_id is not None]

@@ -1,11 +1,12 @@
 """Microbatch tail runner — the engine's `Pipeline.run` loop.
 
-Two execution modes over the same merge code path:
+Two execution modes over the transcript vault's one pipe:
 
 * **replay(events)** — batch mode: partition a bounded change stream by
-  ``batch_id`` and apply batches in order. This is the reference's
-  run-per-day model (pyelt/pipeline.py:106-197) and the mode used by the
-  correctness suite and the benchmark.
+  ``batch_id`` and apply batches in order through ``Pipe.replay`` (one
+  bucket probe, per-table lanes, window-coalesced catch-up). This is the
+  reference's run-per-day model (pyelt/pipeline.py:106-197) and the mode
+  used by the correctness suite and the benchmark.
 
 * **tail(input_dir)** — Structured Streaming: ``readStream`` over a
   parquet directory of change events, ``foreachBatch`` into the same
@@ -21,288 +22,29 @@ merge metrics (per-partition lineage) for every commit.
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from pyelt_spark.operators.prefetch import run_lane_one_ahead
 from pyelt_spark.plans.pipeline import TranscriptVault
 
 
-from pyelt_spark.plans.pipe import _window_sized  # noqa: F401  (shared gate)
-
-
 class MicrobatchRunner:
-    def __init__(self, vault: TranscriptVault, prefetch: bool = True):
+    def __init__(self, vault: TranscriptVault):
         self.vault = vault
-        # sat-lane one-ahead prefetch (see replay); off = plain lanes,
-        # kept togglable for A/B latency measurement
-        self.prefetch = prefetch
 
     # ------------------------------------------------------------ batch mode
 
-    def replay(
-        self,
-        events: DataFrame,
-        batch_col: str = "batch_id",
-        on_batch: Callable[[int, dict], None] | None = None,
-    ) -> list[dict[str, Any]]:
-        """Apply all batches in ``batch_col`` order, skipping batch ids the
-        vault has already committed (crash-resume / exactly-once).
-
-        A batch counts as done only when EVERY table's commit log has it —
-        a crash can land with some tables committed and others not; each
-        merge is individually idempotent, so re-applying such a torn batch
-        completes exactly the missing tables.
-
-        Execution is LANED: each table (hub / sat / link) runs its batches
-        as its own sequential chain, and the three chains run concurrently.
-        Correctness needs only per-table batch order (batch N+1's merge
-        reads the state batch N's commit published — on its OWN table;
-        hash surrogate keys mean no table ever reads another's state), so
-        a per-batch barrier across tables is pure wasted wall-clock: the
-        replay's floor drops from Σ max(table latencies) to
-        max(Σ per-table latencies). On a cluster the same structure keeps
-        three shuffle/write pipelines in flight continuously instead of
-        draining to the slowest table once per batch."""
-        done = (
-            self.vault.sat.committed_batch_ids()
-            & self.vault.hub.committed_batch_ids()
-            & self.vault.link.committed_batch_ids()
-        )
-        # ONE up-front job computes every batch's affected buckets for all
-        # three tables (batch ids fall out of the same aggregation) — the
-        # per-batch merges then skip their bucket-discovery collect, taking
-        # one driver-blocking job off each batch's critical path. A bucket
-        # SUPERSET per table is fine (hub/link sets here ignore the op/null
-        # filters): it only widens the pruned state read.
-        from pyelt_spark.functions.hashing import hash_key
-        from pyelt_spark.storage.lake import bucket_expr
-
+    def replay(self, events: DataFrame, batch_col: str = "batch_id") -> list[dict[str, Any]]:
+        """Apply all batches in ``batch_col`` order through ``Pipe.replay``,
+        skipping batches the vault has already committed (crash-resume /
+        exactly-once). A batch counts as done only when EVERY table has it
+        (or provably gets nothing from it): a crash can land with some
+        tables committed and others not, and re-applying such a torn batch
+        completes exactly the missing tables. Per-batch results carry the
+        vault's ``hub``/``sat``/``link`` keys."""
         v = self.vault
-        probes = [
-            F.struct(
-                F.lit("sat").alias("t"),
-                bucket_expr(
-                    hash_key(*v.sat_merge.business_keys), v.sat.num_buckets
-                ).alias("k"),
-            ),
-            F.struct(
-                F.lit("hub").alias("t"),
-                bucket_expr(
-                    hash_key(*v.hub_merge.business_keys), v.hub.num_buckets
-                ).alias("k"),
-            ),
-            F.struct(
-                F.lit("link").alias("t"),
-                F.when(
-                    F.col("tool").isNotNull(),
-                    bucket_expr(
-                        hash_key(*v.link_merge.business_keys), v.link.num_buckets
-                    ),
-                ).alias("k"),
-            ),
-        ]
-        rows = (
-            events.select(
-                F.col(batch_col).alias("_b"), F.explode(F.array(*probes)).alias("s")
-            )
-            .select("_b", F.col("s.t").alias("t"), F.col("s.k").alias("k"))
-            .filter(F.col("k").isNotNull())
-            .groupBy("_b", "t", "k")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        affected: dict[int, dict[str, list[int]]] = {}
-        rows_per: dict[tuple[int, str], int] = {}
-        for r in rows:
-            affected.setdefault(int(r["_b"]), {}).setdefault(r["t"], []).append(
-                int(r["k"])
-            )
-            key = (int(r["_b"]), r["t"])
-            rows_per[key] = rows_per.get(key, 0) + int(r["n"])
-        # every table is probed unconditionally, so a missing entry for a
-        # batch PROVES that table gets no rows there — record the empty
-        # list and the vault skips that merge without any Spark job (the
-        # common case: a batch with no tool turns feeds the link nothing)
-        for slot in affected.values():
-            for t in ("sat", "hub", "link"):
-                slot.setdefault(t, [])
-        batch_ids = sorted(affected)
-        pending = [b for b in batch_ids if b not in done]
-        if not pending:
-            return [{"batch_id": b, "skipped_duplicate_batch": b} for b in batch_ids]
-
-        op_filter = (
-            (lambda df: df.filter(F.col("op") != "D"))
-            if "op" in events.columns
-            else (lambda df: df)
-        )
-        sat_merge = v.batch_sat_merge(events)
-
-        def _hub(b: int, aff: list[int] | None) -> dict:
-            ups = op_filter(events.filter(F.col(batch_col) == b))
-            return v.hub_merge.apply_batch(v.hub, ups, b, aff)
-
-        def _sat(b: int, aff: list[int] | None, prepared: dict | None = None) -> dict:
-            batch_df = events.filter(F.col(batch_col) == b)
-            return sat_merge.apply_batch(v.sat, batch_df, b, {}, aff, prepared=prepared)
-
-        def _link(b: int, aff: list[int] | None) -> dict:
-            ups = op_filter(events.filter(F.col(batch_col) == b)).filter(
-                F.col("tool").isNotNull()
-            )
-            return v.link_merge.apply_batch(v.link, ups, b, aff)
-
-        # lane-scoped maintenance: each lane compacts only ITS tables (a
-        # cross-lane compaction would violate the tables' single-writer
-        # commit protocol mid-replay)
-        lanes = {
-            "hub": (_hub, lambda: v.hub.compact_if_crowded()),
-            "sat": (
-                _sat,
-                # max_dirs_per_bucket=16 matches the serial path
-                # (pipeline.maintain) — compact_head's own default of 8
-                # would silently double MoR compaction frequency mid-replay
-                lambda: (
-                    v.sat.hist.compact_if_crowded(),
-                    v.sat.compact_head(max_dirs_per_bucket=16),
-                ),
-            ),
-            "link": (_link, lambda: v.link.compact_if_crowded()),
-        }
-
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        results: dict[tuple[str, int], dict] = {}
-        lock = threading.Lock()
-        lane_done: dict[int, int] = {b: 0 for b in pending}
-        fired = [0]  # next pending index whose on_batch may fire
-
-        def _assemble(b: int) -> dict:
-            return {name: results[(name, b)] for name in lanes}
-
-        def _mark(b: int) -> None:
-            if on_batch is None:
-                return
-            with lock:
-                lane_done[b] += 1
-                while fired[0] < len(pending) and lane_done[pending[fired[0]]] == len(lanes):
-                    nb = pending[fired[0]]
-                    on_batch(nb, _assemble(nb))
-                    fired[0] += 1
-
-        # WINDOW-COALESCED lanes: each table applies its whole pending id
-        # window in one closed-form pass (Scd2Merge.apply_batches /
-        # HubMerge.apply_batches — the catch-up mode), falling back to the
-        # per-batch chain when a table's preconditions fail (merge-on-read
-        # head, or out-of-order winner seqs). Probe-proven-empty batches
-        # are excluded from each table's window, exactly like the
-        # per-batch skip.
-        def _window_ids(t: str) -> list[int]:
-            return [b for b in pending if affected.get(b, {}).get(t) != []]
-
-        def _window_aff(t: str) -> list[int]:
-            return sorted(
-                {k for b in pending for k in (affected.get(b, {}).get(t) or [])}
-            )
-
-        def _try_window(name: str) -> bool:
-            ids_t = _window_ids(name)
-            aff_t = _window_aff(name)
-            if not _window_sized(
-                v.spark, sum(rows_per.get((b, name), 0) for b in ids_t)
-            ):
-                return False
-            if name == "sat":
-                res = sat_merge.apply_batches(
-                    v.sat, events, batch_col, ids_t, lineage={},
-                    affected_buckets=aff_t,
-                )
-            elif name == "hub":
-                res = v.hub_merge.apply_batches(
-                    v.hub, op_filter(events), batch_col, ids_t,
-                    affected_buckets=aff_t,
-                )
-            else:
-                res = v.link_merge.apply_batches(
-                    v.link,
-                    op_filter(events).filter(F.col("tool").isNotNull()),
-                    batch_col,
-                    ids_t,
-                    affected_buckets=aff_t,
-                )
-            if res is None:
-                return False
-            for b in pending:
-                results[(name, b)] = res.get(b, {"skipped_empty_batch": b})
-            lanes[name][1]()  # lane-scoped maintenance once per window
-            for b in pending:
-                _mark(b)
-            return True
-
-        # Sat-lane pipelining (operators/prefetch.py): the batch-side frame
-        # (the merge's one full shuffle — dedup + hashdiff) reads no table
-        # state, so batch N+1's frame is prefetched on a side thread while
-        # batch N's head/hist writes run. The sat lane is the replay's
-        # critical path (widest payload, head + hist writes per batch);
-        # hub/link merges are cheaper than the sat's write tail, so
-        # prefetching them would only add job-scheduler contention.
-        def _sat_job(b: int, aff: list[int] | None):
-            if aff == []:
-                return lambda: {"skipped_empty_batch": b}
-
-            def fn(prepared: dict | None = None) -> dict:
-                # one sat invocation shared by both prefetch states — a
-                # divergence here is the class the parity tests pin
-                return _sat(b, aff, prepared)
-
-            # a torn-crash resume re-walks sat-committed batches (the done
-            # set intersects all tables); apply_batch skips them before
-            # touching the frame, so prefetching one would be a wasted
-            # full dedup+hashdiff shuffle (ADVICE r5) — no hooks for them
-            if b in v.sat.committed_batch_ids():
-                return fn
-
-            fn.prepare = lambda: sat_merge.prepare_batch(
-                v.sat, events.filter(F.col(batch_col) == b)
-            )
-            fn.apply_prepared = fn
-            return fn
-
-        def _run_lane(name: str) -> None:
-            fn, maintain = lanes[name]
-            if _try_window(name):
-                return
-
-            def emit(b: int, out: dict) -> None:
-                results[(name, b)] = out
-                maintain()
-                _mark(b)
-
-            if name == "sat" and self.prefetch:
-                run_lane_one_ahead(
-                    [(b, _sat_job(b, affected.get(b, {}).get("sat"))) for b in pending],
-                    emit,
-                )
-                return
-            for b in pending:
-                aff = affected.get(b, {}).get(name)
-                emit(b, {"skipped_empty_batch": b} if aff == [] else fn(b, aff))
-
-        with ThreadPoolExecutor(max_workers=len(lanes)) as pool:
-            futs = [pool.submit(_run_lane, name) for name in lanes]
-            for f in futs:
-                f.result()
-
-        return [
-            {"batch_id": b, "skipped_duplicate_batch": b}
-            if b in done
-            else _assemble(b)
-            for b in batch_ids
-        ]
+        return [v._table_keys(o) for o in v._pipe_for(events).replay(events, batch_col)]
 
     # -------------------------------------------------------- streaming mode
 

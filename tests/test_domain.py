@@ -673,3 +673,30 @@ def test_pipe_skips_provably_empty_merges(spark, tmp_path):
     assert pipe.hub_table(Patient).read().count() == 1
     assert pipe.hub_table(Handeling).read().count() == 1
     assert pipe.sat_table("patient_sat").current().count() == 1
+
+
+def test_pipe_rereplay_skips_every_batch(spark, tmp_path):
+    """Resume skip: re-running replay over a fully replayed pipe skips each
+    batch whole — ``skipped_duplicate_batch`` per batch, no lane work and
+    no new run record. Batch 1 feeds the handeling tables and the link
+    nothing, so it counts as done through the probe's empty proof rather
+    than through their commit logs."""
+    pipe = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4)
+    ev = spark.createDataFrame(
+        [
+            _ev(1, "p1", "Jan", straat="Dam 1", adres_type="postadres") + (0,),
+            _ev(2, "p2", "Piet", handeling="h1") + (0,),
+            _ev(3, "p1", "Jan B") + (1,),
+            _ev(4, "p3", "Kees", handeling="h2", dyn_type="locatie", dyn_key="l9") + (2,),
+        ],
+        _SCHEMA + ", batch_id int",
+    )
+    first = pipe.replay(ev)
+    assert [o["batch_id"] for o in first] == [0, 1, 2]
+    assert first[1]["handeling_hub"] == {"skipped_empty_batch": 1}
+    n_runs = len(pipe.runs_log())
+    assert n_runs == 3
+
+    again = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4).replay(ev)
+    assert again == [{"batch_id": b, "skipped_duplicate_batch": b} for b in (0, 1, 2)]
+    assert len(pipe.runs_log()) == n_runs

@@ -132,6 +132,30 @@ def test_streaming_tail_with_schema_evolution(spark, tmp_path):
     assert sat.count() > n_before
 
 
+def test_replay_with_schema_evolution(spark, tmp_path):
+    """An additive column arriving mid-stream through the batch replay:
+    batches 0-1 land without ``meta``, the resumed replay of the full
+    stream carries it into the sat as recipe version 2, and current state
+    still matches the oracle."""
+    ev = transcript_change_events(
+        spark, 1200, batch_size=300, seed=21, evolve_from_batch=2
+    ).persist()
+    vault = TranscriptVault(spark, str(tmp_path / "vault"), num_buckets=8)
+    runner = MicrobatchRunner(vault)
+    runner.replay(ev.filter("batch_id < 2").drop("meta"))
+    assert vault.sat.recipe().current_version == 1
+
+    runner.replay(ev)
+    sat = vault.sat.read()
+    assert "meta" in sat.columns
+    assert vault.sat.recipe().current_version == 2
+    assert sat.filter("meta is not null").count() > 0
+    got = vault.current_turns().select("conv_id", "turn_idx", "role", "text", "tool")
+    want = _oracle_current(ev)
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    ev.unpersist()
+
+
 def test_replay_skips_link_on_toolless_batch(spark, tmp_path):
     """The replay probe proves a batch with no tool turns feeds the link
     nothing — that merge must be skipped with zero Spark jobs while hub
