@@ -37,7 +37,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyelt_spark.operators.hubs import HubMerge, LinkMerge
@@ -92,16 +92,32 @@ def _union(frames: list[DataFrame], allow_missing: bool = True) -> DataFrame:
     return u
 
 
+class _Feed(NamedTuple):
+    """One mapping's rows into one target: the mapping's projection plus
+    ``cols`` (name → column, added in order), kept where every SQL
+    predicate in ``conds`` holds. The replay probe evaluates the same feed
+    over the raw stream (``Pipe._probe``)."""
+
+    mapping: Any
+    cols: tuple[tuple[str, Column], ...] = ()
+    conds: tuple[str, ...] = ()
+
+    def frame(self, ev: DataFrame) -> DataFrame:
+        for name, c in self.cols:
+            ev = ev.withColumn(name, c)
+        return _where(ev, list(self.conds))
+
+
 class _Target(NamedTuple):
     """One merge of a run: a table, its merge and the frame feeding it (the
-    union of every mapping that targets the table)."""
+    union of every mapping that targets the table, one ``_Feed`` each)."""
 
     name: str
     table: Any  # LakeTable | Scd2Table
     merge: Any  # HubMerge | LinkMerge | Scd2Merge
     frame: DataFrame
+    feeds: tuple[_Feed, ...] = ()  # empty: not bucket-probed by replay
     snapshot: bool = False  # snapshot sat: never skipped, never windowed
-    probe: bool = True  # bucket-probed by replay (not snapshots/valuesets)
 
 
 # --------------------------------------------------------------------------
@@ -556,13 +572,17 @@ class Pipe:
             return self._entity_targets(
                 [(m, self._mapping_frame(m, staged, batch_id)) for m in feeds]
             )
-        link_evs: "OrderedDict[type[LinkEntity], list[DataFrame]]" = OrderedDict()
+        link_evs: "OrderedDict[type[LinkEntity], list[tuple[_Feed, DataFrame]]]" = OrderedDict()
         for m in feeds:
             ev = self._mapping_frame(m, staged, batch_id)
-            link_evs.setdefault(m.link, []).append(self._link_input(m.link, ev, m.type_expr))
+            f = self._link_feed(m, ev.columns)
+            link_evs.setdefault(m.link, []).append((f, f.frame(ev)))
         return [
-            _Target(le.__dbname__, self.links[le], self.link_merges[le], _union(frames))
-            for le, frames in link_evs.items()
+            _Target(
+                le.__dbname__, self.links[le], self.link_merges[le],
+                _union([fr for _, fr in fed]), feeds=tuple(f for f, _ in fed),
+            )
+            for le, fed in link_evs.items()
         ]
 
     def _mapping_frame(self, m: Any, staged: DataFrame | None, batch_id: int | None) -> DataFrame:
@@ -570,29 +590,22 @@ class Pipe:
             return self._as_upsert_events(m.view(self), batch_id)
         return self._project(staged, m.field_map, m.filter)
 
-    def _entity_inputs(
-        self,
-        entity: type[HubEntity],
-        ev: DataFrame,
-        sat_names: list[str] | None,
-        snapshot: bool = False,
-    ) -> tuple[tuple[type[HubEntity], DataFrame], list[tuple[str, DataFrame, bool]]]:
-        """One mapping's contribution: (hub owner, upsert frame) plus
-        per-sat (name, keyed frame, snapshot?) inputs."""
-        owner = entity.__entity_owner__
-        cols = ev.columns
-        hub_ev = _where(ev, self._upsert_conds(cols))
-        if entity.__subtype__:
-            # subtype entity sharing the owner's hub: its rows register in
-            # the SHARED hub with type=<subtype> so downstream queries can
-            # tell subtypes apart (HubEntityMetaClass subtype branch,
-            # dv_metaclasses.py:116; hub insert etl.py:414-417 where the
-            # mapping's target type overrides the static hub type)
-            hub_ev = hub_ev.withColumn("_hub_type", F.lit(entity.__subtype__))
-        hub_input = (owner, hub_ev)
-        sat_inputs: list[tuple[str, DataFrame, bool]] = []
-        wanted = entity.__sats__ if sat_names is None else {
-            n: s for n, s in entity.__sats__.items() if n in sat_names
+    def _entity_feeds(
+        self, m: Any, cols: list[str]
+    ) -> tuple[_Feed, list[tuple[str, _Feed]]]:
+        """One entity mapping's contribution, given its projected columns:
+        the hub's upsert feed plus per-sat (name, keyed feed)."""
+        entity = m.entity
+        # subtype entity sharing the owner's hub: its rows register in
+        # the SHARED hub with type=<subtype> so downstream queries can
+        # tell subtypes apart (HubEntityMetaClass subtype branch,
+        # dv_metaclasses.py:116; hub insert etl.py:414-417 where the
+        # mapping's target type overrides the static hub type)
+        hub_cols = (("_hub_type", F.lit(entity.__subtype__)),) if entity.__subtype__ else ()
+        hub_feed = _Feed(m, hub_cols, tuple(self._upsert_conds(cols)))
+        sat_feeds: list[tuple[str, _Feed]] = []
+        wanted = entity.__sats__ if m.sats is None else {
+            n: s for n, s in entity.__sats__.items() if n in m.sats
         }
         for name, sat in wanted.items():
             need = self.sat_merges[name].business_keys
@@ -605,26 +618,29 @@ class Pipe:
             conds = [_not_null(c) for c in need]
             if isinstance(sat, type) and issubclass(sat, HybridSat):
                 conds.insert(0, _not_null("type"))
-            sat_inputs.append((name, _where(ev, conds), snapshot))
-        return hub_input, sat_inputs
+            sat_feeds.append((name, _Feed(m, (), tuple(conds))))
+        return hub_feed, sat_feeds
 
     def _entity_targets(self, inputs: list[tuple[Any, DataFrame]]) -> list[_Target]:
-        hub_evs: "OrderedDict[type[HubEntity], list[DataFrame]]" = OrderedDict()
-        sat_evs: "OrderedDict[str, list[DataFrame]]" = OrderedDict()
+        hub_evs: "OrderedDict[type[HubEntity], list[tuple[_Feed, DataFrame]]]" = OrderedDict()
+        sat_evs: "OrderedDict[str, list[tuple[_Feed, DataFrame]]]" = OrderedDict()
         sat_snap: dict[str, set[bool]] = {}
         for m, ev in inputs:
-            hub_in, sats_in = self._entity_inputs(
-                m.entity, ev, m.sats, getattr(m, "snapshot", False)
+            hub_feed, sat_feeds = self._entity_feeds(m, ev.columns)
+            hub_evs.setdefault(m.entity.__entity_owner__, []).append(
+                (hub_feed, hub_feed.frame(ev))
             )
-            hub_evs.setdefault(hub_in[0], []).append(hub_in[1])
-            for name, sev, snap in sats_in:
-                sat_evs.setdefault(name, []).append(sev)
-                sat_snap.setdefault(name, set()).add(snap)
+            for name, f in sat_feeds:
+                sat_evs.setdefault(name, []).append((f, f.frame(ev)))
+                sat_snap.setdefault(name, set()).add(getattr(m, "snapshot", False))
         targets = [
-            _Target(o.__hub_name__, self.hubs[o], self.hub_merges[o], _union(frames))
-            for o, frames in hub_evs.items()
+            _Target(
+                o.__hub_name__, self.hubs[o], self.hub_merges[o],
+                _union([fr for _, fr in fed]), feeds=tuple(f for f, _ in fed),
+            )
+            for o, fed in hub_evs.items()
         ]
-        for name, frames in sat_evs.items():
+        for name, fed in sat_evs.items():
             if len(sat_snap[name]) > 1:
                 raise ValueError(
                     f"sat {name}: mixing snapshot and change-stream mappings "
@@ -633,8 +649,10 @@ class Pipe:
             snapshot = sat_snap[name] == {True}
             targets.append(
                 _Target(
-                    name, self.sats[name], self.sat_merges[name], _union(frames),
-                    snapshot=snapshot, probe=not snapshot,
+                    name, self.sats[name], self.sat_merges[name],
+                    _union([fr for _, fr in fed]),
+                    feeds=() if snapshot else tuple(f for f, _ in fed),
+                    snapshot=snapshot,
                 )
             )
         return targets
@@ -658,33 +676,30 @@ class Pipe:
                 .filter(F.col("code").isNotNull())
             )
             by_name.setdefault(m.valueset_name, []).append(vs)
-        # valuesets are never probed: an unfed registry still commits every
-        # batch, so it always has a manifest (and schema) to read
+        # valuesets are never probed (no feeds): an unfed registry still
+        # commits every batch, so it always has a manifest (and schema)
         return [
             _Target(
                 f"valueset_{name}", self.valuesets[name], self.valueset_merges[name],
-                _union(frames, allow_missing=False), probe=False,
+                _union(frames, allow_missing=False),
             )
             for name, frames in by_name.items()
         ]
 
-    def _link_input(
-        self,
-        link_entity: type[LinkEntity],
-        ev: DataFrame,
-        type_expr: str | None,
-    ) -> DataFrame:
-        link = link_entity.__link__
+    def _link_feed(self, m: Any, cols: list[str]) -> _Feed:
+        """A link mapping's feed, given its projected columns."""
+        link = m.link.__link__
+        extra: tuple[tuple[str, Column], ...] = ()
         if issubclass(link, HybridLink):
-            ev = ev.withColumn("type", F.expr(type_expr or "'default'"))
-        cols = ev.columns
+            extra = (("type", F.expr(m.type_expr or "'default'")),)
+            cols = cols + ["type"]
         # a link row needs every TYPED leg key present (null-legged
         # associations are not associations; reference links FK-join through
         # hub ids) — dynamic legs are optional per row (dv.py:136-137)
         required = [
             c for r in link.cls_get_link_refs().values() for c in r.key_cols if c in cols
         ]
-        return _where(ev, self._upsert_conds(cols) + [_not_null(c) for c in required])
+        return _Feed(m, extra, tuple(self._upsert_conds(cols) + [_not_null(c) for c in required]))
 
     # ----------------------------------------------------------------- jobs
 
@@ -810,7 +825,11 @@ class Pipe:
 
         Where lanes apply (``_laneable``) the replay runs per-table lanes
         (``_replay_laned``); otherwise it falls back to the serial
-        per-batch ``run`` loop, compacting after every batch."""
+        per-batch ``run`` loop, compacting after every batch. ``events`` is
+        not persisted on either path: on the serial path, which re-reads
+        it once per batch per mapping, a persisted stream was slower in 4
+        of 4 interleaved pairs (sf0.01 domain replay, ``local[4]``: median
+        12.6 s persisted against 12.1 s re-read)."""
         parts = ALL_PARTS if parts is None else parts
         targets = self._sor_targets(events, parts, batch_col)
         ids, affected, rows_per = self._probe(events, batch_col, targets)
@@ -829,39 +848,76 @@ class Pipe:
     def _probe(
         self, events: DataFrame, batch_col: str, targets: list[_Target]
     ) -> tuple[list[int], dict[int, dict[str, list[int]]], dict[tuple[int, str], int]]:
-        """One aggregation over the stream: the batch ids, each batch's
-        bucket list per probed table (``affected[b][table]``; ``[]`` proves
-        an empty input — hash keys are never null, so each list is a
-        superset) and each (batch, table)'s input row count for the window
-        volume gate. Snapshot sats and valuesets are not probed. The raw
-        stream rides along as one more branch (table null), so batch-id
-        discovery shares the probe job. ``events`` is not persisted: in
-        traced perfbench catch-up runs (5k events, 4 vCPUs) a persisted
-        stream cost the probe 5 jobs and 0.34 executor CPU-s, re-scans
-        2 jobs and 0.25-0.30 CPU-s."""
+        """One aggregation over ONE scan of the stream: the batch ids, each
+        batch's bucket list per probed table (``affected[b][table]``; ``[]``
+        proves an empty input) and each (batch, table)'s input row count
+        for the window volume gate. Each feed of a probed table becomes one
+        ``when(<mapping filter AND feed predicates>, bucket)`` column over
+        the raw stream, so the buckets are exactly the merge input's.
+        Snapshot sats and valuesets have no feeds and are not probed."""
         from pyelt_spark.functions.hashing import hash_key
         from pyelt_spark.storage.lake import bucket_expr
 
         probed = [
             t for t in targets
-            if t.probe and all(c in t.frame.columns for c in t.merge.business_keys)
+            if t.feeds and all(c in t.frame.columns for c in t.merge.business_keys)
         ]
-        frames = [
-            events.select(
-                F.col(batch_col).alias("_b"),
-                F.lit(None).cast("string").alias("t"),
-                F.lit(None).cast("int").alias("k"),
+        raw = events.columns
+        df, kcols = events, []
+        for m in self.mappings:
+            feeds = [(t, f) for t in probed for f in t.feeds if f.mapping is m]
+            if not feeds:
+                continue
+            # evaluate the mapping's feeds under its projected column names
+            # (a mapping's feeds add at most the hub's ``_hub_type`` or the
+            # link's ``type``), then restore the raw columns it overwrote
+            extra = {n: c for _, f in feeds for n, c in f.cols}
+            over = [c for c in raw if c in m.field_map or c in extra]
+            ev = df.select(
+                "*",
+                *[F.col(f"`{c}`").alias(f"__raw_{c}") for c in over],
+                (F.expr(m.filter) if m.filter else F.lit(True)).alias("__keep"),
             )
-        ] + [
-            t.frame.select(
-                F.col(batch_col).alias("_b"),
-                F.lit(t.name).alias("t"),
-                bucket_expr(hash_key(*t.merge.business_keys), t.table.num_buckets).alias("k"),
+            ev = self._project(ev, m.field_map, None)
+            if extra:
+                ev = ev.withColumns(extra)
+            cols = set(ev.columns)
+            names = [f"__k{len(kcols) + i}" for i in range(len(feeds))]
+            new = []
+            for name, (t, f) in zip(names, feeds):
+                keys = [
+                    F.col(f"`{c}`") if c in cols else F.lit(None)
+                    for c in t.merge.business_keys
+                ]
+                hit = F.expr(" AND ".join(f"({c})" for c in ["__keep", *f.conds]))
+                bucket = bucket_expr(hash_key(*keys), t.table.num_buckets)
+                new.append(
+                    F.struct(F.lit(t.name).alias("t"), F.when(hit, bucket).alias("k")).alias(name)
+                )
+            # by-name drop/rename: a per-column select costs py4j round trips
+            df = (
+                ev.select("*", *new)
+                .drop("__keep", *m.field_map, *extra)
+                .withColumnsRenamed({f"__raw_{c}": c for c in over})
             )
-            for t in probed
-        ]
+            kcols += names
+        # the raw row itself rides along (table null): batch-id discovery
+        # shares the probe job
         rows = (
-            _union(frames, allow_missing=False)
+            df.select(
+                F.col(f"`{batch_col}`").alias("_b"),
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.lit(None).cast("string").alias("t"),
+                            F.lit(None).cast("int").alias("k"),
+                        ),
+                        *kcols,
+                    )
+                ).alias("s"),
+            )
+            .select("_b", "s.t", "s.k")
+            .filter("t IS NULL OR k IS NOT NULL")
             .groupBy("_b", "t", "k")
             .agg(F.count("*").alias("n"))
             .collect()
@@ -913,10 +969,13 @@ class Pipe:
         pure wasted wall-clock; dropping it takes the replay from
         Σ_batches max_tables(latency) to max_tables Σ_batches(latency).
 
-        Resume: a batch every table has committed (or provably gets
-        nothing from) is skipped whole — no lane work, no run record.
-        Each merge stays individually idempotent per (table, batch_id), so
-        a crash — which can leave DIFFERENT tables at different batches —
+        Resume: a batch that some table has committed and every other
+        table has committed or provably gets nothing from is skipped
+        whole — no lane work, no run record. A batch no table committed
+        runs, so a batch that feeds nothing still leaves its run record
+        (the pipe-wide batch-id high-water mark, ``EntityData``). Each
+        merge stays individually idempotent per (table, batch_id), so a
+        crash — which can leave DIFFERENT tables at different batches —
         still resumes exactly-once by re-running the replay. Run-registry
         records are started per pending batch up front and finished as
         the outputs assemble; a crash leaves every unfinished batch
@@ -925,7 +984,8 @@ class Pipe:
         outs: dict[int, dict[str, Any]] = {
             b: {"batch_id": b, "skipped_duplicate_batch": b}
             for b in ids
-            if all(b in committed[t.name] or affected[b].get(t.name) == [] for t in targets)
+            if any(b in committed[t.name] for t in targets)
+            and all(b in committed[t.name] or affected[b].get(t.name) == [] for t in targets)
         }
         pending = [b for b in ids if b not in outs]
         if not pending:

@@ -700,3 +700,29 @@ def test_pipe_rereplay_skips_every_batch(spark, tmp_path):
     again = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4).replay(ev)
     assert again == [{"batch_id": b, "skipped_duplicate_batch": b} for b in (0, 1, 2)]
     assert len(pipe.runs_log()) == n_runs
+
+
+def test_pipe_replay_records_batch_that_feeds_nothing(spark, tmp_path):
+    """A batch whose rows every mapping filters out commits on no table,
+    but its first replay still runs it: it leaves a run record, and a
+    following ``EntityData.save()`` takes the next id instead of reusing
+    it."""
+    from pyelt_spark.plans.orm import EntityData
+
+    pipe = Pipe(spark, str(tmp_path / "dv"), [_mappings()[1]], num_buckets=4)
+    ev = spark.createDataFrame(
+        [
+            _ev(1, "p1", "Jan", handeling="h1") + (0,),
+            _ev(2, "p2", "Piet") + (1,),
+        ],
+        _SCHEMA + ", batch_id int",
+    )
+    out = pipe.replay(ev)
+    assert [o["batch_id"] for o in out] == [0, 1]
+    assert out[1]["handeling_hub"] == {"skipped_empty_batch": 1}
+    assert "skipped_duplicate_batch" not in out[1]
+    assert sorted(r["run_id"] for r in pipe.runs_log()) == [0, 1]
+
+    data = EntityData(pipe, Handeling)
+    data.new(handeling_id="h2").set_sat("default", naam="handeling h2")
+    assert data.save()["batch_id"] == 2
