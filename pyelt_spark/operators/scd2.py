@@ -36,6 +36,11 @@ out-of-order guard airtight: a late pre-delete update (seq between the
 last content seq and the delete's seq) is detected as stale against the
 tombstone and cannot resurrect a deleted key.
 
+The head is copy-on-write only: a merge rewrites each touched bucket in
+one write job (``_apply_cow`` per batch, ``apply_batches`` per window).
+There is no merge-on-read head (append deltas, collapse at read time): on
+the bench stream it lost every time it was measured (README decision 6).
+
 Everything is JVM column expressions — no per-row Python.
 """
 
@@ -79,29 +84,18 @@ class ScdColumns:
         ]
 
 
-MOR_CV = "_cv"  # merge-on-read supersession stamp (the applying batch id)
-
-
 class Scd2Table:
     """Head/history split SCD2 satellite (see module docstring).
 
-    ``mor=True`` switches the head to MERGE-ON-READ: a batch APPENDS only
-    its changed keys' rows (stamped with the batch id) instead of
-    rewriting every touched bucket, and reads collapse to the latest row
-    per key. Measured motivation: at 4M-events/batch density the
-    copy-on-write head rewrite is 12–23 s of a 34–43 s batch — for
-    dense-update workloads the rewrite is the wall. Trade: reads pay a
-    per-bucket collapse over the accumulated deltas until ``compact_head``
-    folds them (the Iceberg/Hudi MoR + compaction shape). Default stays
-    copy-on-write: read-heavy state with sparse batches wants one file
-    set, no collapse."""
+    The head is copy-on-write: every merge rewrites each touched bucket as
+    ONE new data dir, so a head bucket never references more than one dir
+    and a read needs no collapse. This is the reference's one load shape —
+    the active row is closed in place (etl.py:174-177)."""
 
-    def __init__(self, spark: SparkSession, path: str, num_buckets: int = 32,
-                 mor: bool = False):
+    def __init__(self, spark: SparkSession, path: str, num_buckets: int = 32):
         self.spark = spark
         self.path = path
         self.num_buckets = num_buckets
-        self.mor = mor
         self.head = LakeTable(spark, os.path.join(path, "head"), num_buckets)
         self.hist = LakeTable(spark, os.path.join(path, "hist"), num_buckets)
 
@@ -118,52 +112,22 @@ class Scd2Table:
     def recipe(self) -> HashRecipe | None:
         return self.head.recipe()
 
-    def _collapsed(self, buckets: list[int] | None = None) -> DataFrame:
-        """MoR collapse keeping the supersession stamp (compaction needs
-        it so later appends still supersede folded rows)."""
-        from pyelt_spark.operators.dedup import latest_per_key
-
-        return latest_per_key(self.head.read(buckets=buckets), ["_key"], [MOR_CV])
-
-    def head_read(self, buckets: list[int] | None = None) -> DataFrame:
-        """Current head rows (one per key). MoR: collapse appended deltas
-        to each key's latest stamped row — a map-side-combinable max_by,
-        the same skew-proof shape as the dedup operator."""
-        if not self.mor:
-            return self.head.read(buckets=buckets)
-        return self._collapsed(buckets).drop(MOR_CV)
-
     def current(self) -> DataFrame:
         """Active (non-deleted) current versions: the head minus tombstones."""
-        return self.head_read().filter(F.col("_active"))
+        return self.head.read().filter(F.col("_active"))
 
     def read(self) -> DataFrame:
         """Full SCD2 history: closed versions ∪ head rows."""
-        head = self.head_read()
+        head = self.head.read()
         if self.hist.last_commit() is None or not self.hist.last_commit().buckets:
             return head
         hist = self.hist.read()
         return hist.unionByName(head, allowMissingColumns=True).select(head.columns)
 
-    def compact_head(self, max_dirs_per_bucket: int = 8) -> None:
-        """MoR maintenance: fold each crowded bucket's delta chain back to
-        one collapsed file set (Hudi/Iceberg compaction analog). No-op for
-        copy-on-write tables (their buckets hold one dir by construction)."""
-        if not self.mor:
-            return
-        last = self.head.last_commit()
-        if last is None:
-            return
-        crowded = [
-            int(b) for b, dirs in last.buckets.items() if len(dirs) > max_dirs_per_bucket
-        ]
-        if not crowded:
-            return
-        folded = self._collapsed(buckets=crowded)
-        self.head.commit(
-            folded, affected_buckets=crowded, batch_id=None,
-            metrics={"mor_compaction": True},
-        )  # superseded delta dirs leave the manifest; vacuum() reclaims them
+    def compact_head(self, max_dirs_per_bucket: int = 16) -> None:
+        """Head small-file maintenance: a manifest check only, since a
+        copy-on-write head holds one dir per bucket by construction."""
+        self.head.compact_if_crowded(max_dirs_per_bucket)
 
 
 @dataclass
@@ -249,8 +213,8 @@ class Scd2Merge:
         out = batch.withColumn("_op", op)
         # persist only when the caller materializes the frame ahead of its
         # merge (prefetch): there the cache IS the hand-off. The inline path
-        # skips it — the frame's one consumer is the verdict join (itself
-        # persisted), and a columnar cache fill costs ~2-3x the aggregate
+        # skips it — the frame's one consumer is the merge's full-outer
+        # join, and a columnar cache fill costs ~2-3x the aggregate
         # it would save (measured at sf1.0: ~15 CPU-s fill vs ~6 CPU-s
         # reduce-side recompute; guide §5: cache only when recompute is
         # dearer than the memory pressure).
@@ -271,7 +235,8 @@ class Scd2Merge:
         recipe = self._evolved_recipe(events, table)
         batch = self._build_batch(table, events, recipe, do_persist=True)
         # the materializing action doubles as the per-bucket key census
-        # (manifest lineage) — same one job a bare count() would be
+        # (the manifest's batch_keys_per_bucket) — same one job a bare
+        # count() would be
         rows = batch.groupBy(BUCKET_COL).agg(F.count("*").alias("n")).collect()
         return {
             "batch": batch,
@@ -289,7 +254,6 @@ class Scd2Merge:
         table: Scd2Table,
         events: DataFrame,
         batch_id: int,
-        lineage: dict[str, Any] | None = None,
         affected_buckets: list[int] | None = None,
         prepared: dict[str, Any] | None = None,
     ) -> dict[str, Any]:
@@ -311,8 +275,6 @@ class Scd2Merge:
             return {"skipped_duplicate_batch": batch_id}
 
         recipe = self._evolved_recipe(events, table)
-        payload = recipe.current_cols
-        s = self.sys
 
         # 1. batch-side frame: adopt the prefetched one when its recipe is
         #    still current (the stream's schema didn't evolve between
@@ -330,7 +292,7 @@ class Scd2Merge:
 
         # 2. affected-bucket discovery → pruned HEAD read (one row per key).
         #    When the discovery action runs anyway (no precomputed superset)
-        #    it returns per-bucket key counts for the manifest's lineage;
+        #    it returns the manifest's per-bucket key counts;
         #    prefetched frames carry the same counts from their own
         #    materializing action (prepare_batch).
         bucket_counts: dict[str, int] = {}
@@ -344,113 +306,24 @@ class Scd2Merge:
             bucket_counts = {str(int(r[0])): int(r["n"]) for r in rows}
         first_load = table.last_commit() is None or not table.last_commit().buckets
 
-        if not table.mor:
-            # single-pass copy-on-write merge: ONE full-outer join of batch
-            # and head classified once, exploded into head + history rows,
-            # staged in ONE write job with observe()-collected metrics —
-            # no per-merge cache fills, no separate metrics action, no
-            # second head scan, no head-rewrite join (guide §1.2: remove
-            # passes before tuning inside them)
-            try:
-                return self._apply_cow(
-                    table, batch, batch_id, lineage, affected, recipe,
-                    first_load, bucket_counts,
-                )
-            finally:
-                batch.unpersist()
-
-        if first_load:
-            head_state = None
-            j = (
-                batch.withColumn("_st_active", F.lit(None).cast("boolean"))
-                .withColumn("_st_hd", F.lit(None).cast("string"))
-                .withColumn("_st_hdv", F.lit(None).cast("int"))
-                .withColumn("_st_rev", F.lit(None).cast("long"))
-                .withColumn("_st_seq", F.lit(None).cast("long"))
-            )
-        else:
-            # NOT persisted: scanned exactly twice (the verdict join's
-            # per_key side here, the head-rewrite join in _stage_rewrite),
-            # and two pruned parquet scans cost a fraction of one columnar
-            # cache fill (measured at sf1.0: ~3 CPU-s/scan vs ~15 CPU-s
-            # fill). MoR heads collapse through an aggregate, so the
-            # recompute is dearer — keep the cache there.
-            head_state = table.head_read(buckets=affected)
-            if table.mor:
-                head_state = head_state.persist()
-            per_key = head_state.select(
-                F.col(s.key),
-                F.col(s.active).alias("_st_active"),
-                F.col(s.hashdiff).alias("_st_hd"),
-                F.col(s.hd_version).alias("_st_hdv"),
-                F.col(s.revision).alias("_st_rev"),
-                F.col(s.load_seq).alias("_st_seq"),
-            )
-            j = batch.join(per_key, s.key, "left")
-
-        # 3. classify. Hashdiffs compare under the HEAD row's recipe version
-        #    (schema evolution): equal old-recipe hashes count as unchanged
-        #    ONLY if every column added since is still null.
-        cmp_hd = F.col(s.hashdiff)
-        new_info = F.lit(False)
-        for v in sorted(recipe.versions):
-            if v != recipe.current_version:
-                cmp_hd = F.when(
-                    F.col("_st_hdv") == v, F.col(f"{s.hashdiff}_v{v}")
-                ).otherwise(cmp_hd)
-                added = [c for c in recipe.current_cols if c not in recipe.versions[v]]
-                if added:
-                    any_nonnull = None
-                    for c in added:
-                        e = (F.col(c) if c in batch.columns else F.lit(None)).isNotNull()
-                        any_nonnull = e if any_nonnull is None else (any_nonnull | e)
-                    new_info = F.when(F.col("_st_hdv") == v, any_nonnull).otherwise(new_info)
-
-        is_delete = F.col("_op") == F.lit("D")
-        has_row = F.col("_st_active").isNotNull()
-        is_active = F.col("_st_active") == F.lit(True)
-        seq_expr = F.col(self.order_by[0]).cast("long")
-        # stale guard ACROSS batches: older than anything applied for the key
-        # (tombstones carry the delete's seq, so pre-delete stragglers die here)
-        stale = has_row & (seq_expr < F.col("_st_seq"))
-        unchanged = is_active & ~is_delete & (cmp_hd == F.col("_st_hd")) & ~new_info
-        bump = unchanged & (seq_expr > F.col("_st_seq"))
-
-        j = j.withColumn(
-            "_verdict",
-            F.when(stale, F.lit("stale"))
-            .when(is_delete & is_active, F.lit("delete"))
-            .when(is_delete, F.lit("noop"))
-            .when(bump, F.lit("bump"))
-            .when(unchanged, F.lit("noop"))
-            .when(is_active, F.lit("update"))
-            .when(has_row, F.lit("reinsert"))  # tombstone present: revision keeps counting
-            .otherwise(F.lit("insert")),
-        ).persist()
-
-        def _cleanup():
-            batch.unpersist()
-            j.unpersist()
-            if head_state is not None:
-                head_state.unpersist()
-
+        # 3. single-pass copy-on-write merge: ONE full-outer join of batch
+        #    and head classified once, exploded into head + history rows,
+        #    staged in ONE write job with observe()-collected metrics —
+        #    no per-merge cache fills, no separate metrics action, no
+        #    second head scan, no head-rewrite join (guide §1.2: remove
+        #    passes before tuning inside them)
         try:
-            return self._classify_and_commit(
-                table, j, head_state, batch, batch_id, lineage, affected, recipe
+            return self._apply_cow(
+                table, batch, batch_id, affected, recipe, first_load, bucket_counts,
             )
         finally:
-            # ADVICE r5: an exception mid-merge (classify/stage/commit) must
-            # not leak the persisted frames — under the laned replays a
-            # failed lane otherwise strands up to two batch frames per lane
-            # in the executor cache
-            _cleanup()
+            batch.unpersist()
 
     def _apply_cow(
         self,
         table: Scd2Table,
         batch: DataFrame,
         batch_id: int,
-        lineage: dict[str, Any] | None,
         affected: list[int],
         recipe: HashRecipe,
         first_load: bool,
@@ -484,7 +357,7 @@ class Scd2Merge:
             head_types: dict[str, str] = {}
             fo = batch.withColumn("_in_batch", F.lit(True))
         else:
-            head_state = table.head_read(buckets=affected)
+            head_state = table.head.read(buckets=affected)
             head_types = dict(head_state.dtypes)
             h = head_state.select(
                 *[F.col(c).alias(f"_h_{c}") for c in head_state.columns]
@@ -502,8 +375,10 @@ class Scd2Merge:
         def pay_t(c: str) -> str:
             return batch_types.get(c) or head_types.get(c) or "string"
 
-        # classification — identical rules to the joined path (step 3 of
-        # the MoR branch), plus 'untouched' for head-only rows
+        # classify each joined row ('untouched' for head-only rows).
+        # Hashdiffs compare under the HEAD row's recipe version (schema
+        # evolution): equal old-recipe hashes count as unchanged ONLY if
+        # every column added since is still null.
         cmp_hd = F.col(s.hashdiff)
         new_info = F.lit(False)
         st_hdv = h_(s.hd_version, "int")
@@ -666,7 +541,6 @@ class Scd2Merge:
             "buckets_read": sorted(affected),
             "buckets_written": sorted(staged_head["written_buckets"]),
             "batch_keys_per_bucket": bucket_counts,
-            "lineage": lineage or {},
         }
         if hist_needed and staged_hist["written_buckets"]:
             table.hist.commit(
@@ -694,7 +568,6 @@ class Scd2Merge:
         events: DataFrame,
         batch_col: str = "batch_id",
         batch_ids: list[int] | None = None,
-        lineage: dict[str, Any] | None = None,
         affected_buckets: list[int] | None = None,
     ) -> dict[int, dict[str, Any]] | None:
         """Window-coalesced merge: apply EVERY pending batch of a bounded
@@ -719,17 +592,15 @@ class Scd2Merge:
         id window (`Commit.batch_ids`) — crash-resume granularity becomes
         the window, exactly-once is preserved.
 
-        Preconditions (checked; else ``None``): copy-on-write table, and
-        per key the winners' seqs are non-decreasing in batch order and
-        ≥ the head row's _seq — the sequential stale guard then provably
-        never fires, so the chain form is exact. Out-of-order tails fall
-        back to the per-batch path, which handles them row by row."""
+        Precondition (checked; else ``None``): per key the winners' seqs
+        are non-decreasing in batch order and ≥ the head row's _seq — the
+        sequential stale guard then provably never fires, so the chain
+        form is exact. Out-of-order tails fall back to the per-batch path,
+        which handles them row by row."""
         from pyspark.sql import Window
 
         from pyelt_spark.operators.dedup import _tiebreak
 
-        if table.mor:
-            return None
         s = self.sys
         done = table.committed_batch_ids()
         all_ids = [int(b) for b in (batch_ids or [])]
@@ -744,7 +615,6 @@ class Scd2Merge:
                 table,
                 events.filter(F.col(batch_col) == pending[0]),
                 pending[0],
-                lineage=lineage,
                 affected_buckets=affected_buckets,
             )
             return out
@@ -796,7 +666,7 @@ class Scd2Merge:
             ]
         first_load = table.last_commit() is None or not table.last_commit().buckets
         head_state = (
-            None if first_load else table.head_read(buckets=affected)
+            None if first_load else table.head.read(buckets=affected)
         )
         head_types = dict(head_state.dtypes) if head_state is not None else {}
 
@@ -1202,7 +1072,6 @@ class Scd2Merge:
                 "buckets_read": sorted(affected),
                 "buckets_written": sorted(staged_head["written_buckets"]),
                 "batch_keys_per_bucket": {},
-                "lineage": lineage or {},
                 "window": [pending[0], pending[-1]],
             }
         if hist_needed and staged_hist["written_buckets"]:
@@ -1228,235 +1097,6 @@ class Scd2Merge:
         )
         out.update(metrics_by_batch)
         return out
-
-    def _classify_and_commit(
-        self,
-        table: Scd2Table,
-        j: DataFrame,
-        head_state: DataFrame | None,
-        batch: DataFrame,
-        batch_id: int,
-        lineage: dict[str, Any] | None,
-        affected: list[int],
-        recipe: HashRecipe,
-    ) -> dict[str, Any]:
-        s = self.sys
-        payload = recipe.current_cols
-        seq_expr = F.col(self.order_by[0]).cast("long")
-
-        # 4. new head versions (insert / update / reinsert) — no bucket
-        #    filter: a changed row's bucket is by definition a written
-        #    bucket, and the write scope below is the affected superset
-        new_versions = (
-            j.filter(F.col("_verdict").isin("insert", "update", "reinsert"))
-            .select(
-                F.col(s.key),
-                *[F.col(c) for c in self.business_keys],
-                *[
-                    (F.col(c) if c in batch.columns else F.lit(None)).alias(c)
-                    for c in payload
-                ],
-                F.lit(batch_id).cast("long").alias(s.runid),
-                F.lit(True).alias(s.active),
-                F.col(self.ts_col).cast("timestamp").alias(s.insert_ts),
-                F.lit(None).cast("timestamp").alias(s.finish_ts),
-                F.lit(None).cast("long").alias(s.deleted_runid),
-                (F.coalesce(F.col("_st_rev") + 1, F.lit(0)).cast("long")).alias(s.revision),
-                seq_expr.alias(s.load_seq),
-                F.col(s.hashdiff),
-                F.col(s.hd_version),
-                F.lit(self.source_system).alias(s.source),
-                F.col(BUCKET_COL),
-            )
-        )
-
-        def _stamp(df: DataFrame) -> DataFrame:
-            """Merge-on-read supersession stamp (no-op for copy-on-write)."""
-            if table.mor:
-                return df.withColumn(MOR_CV, F.lit(batch_id).cast("long"))
-            return df
-
-        # 5. stage data files + verdict metrics CONCURRENTLY — the metrics
-        #    aggregation races the stage jobs over the shared persisted
-        #    join (block-level cache locking: each partition is computed
-        #    once, late arrivals read cache), so no driver aggregation
-        #    blocks the write path (VERDICT r2 #1; was: a pre-write
-        #    groupBy().collect() serialized ahead of both stage jobs)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_vc = pool.submit(
-                j.groupBy("_verdict", BUCKET_COL).agg(F.count("*").alias("n")).collect
-            )
-            if head_state is None:
-                # first load: stage the whole batch's head in one write job
-                staged_head = table.head.stage(_stamp(new_versions), affected)
-                staged_hist = None
-            else:
-                staged_head, staged_hist = self._stage_rewrite(
-                    table, j, head_state, new_versions, batch_id, affected, seq_expr
-                )
-            vc = f_vc.result()
-        metrics_rows: dict[str, int] = {}
-        for r in vc:
-            metrics_rows[r["_verdict"]] = metrics_rows.get(r["_verdict"], 0) + r["n"]
-        metrics = {
-            "batch_id": batch_id,
-            "deduped_keys": sum(metrics_rows.values()),
-            "inserted": metrics_rows.get("insert", 0) + metrics_rows.get("reinsert", 0),
-            "updated": metrics_rows.get("update", 0),
-            "deleted": metrics_rows.get("delete", 0),
-            "unchanged": metrics_rows.get("noop", 0) + metrics_rows.get("bump", 0),
-            "stale": metrics_rows.get("stale", 0),
-            "buckets_read": sorted(affected),
-            "buckets_written": sorted(staged_head["written_buckets"]),
-            "batch_keys_per_bucket": {
-                str(b): sum(r["n"] for r in vc if r[BUCKET_COL] == b)
-                for b in {r[BUCKET_COL] for r in vc}
-            },
-            "lineage": lineage or {},
-        }
-
-        # 6. publish manifests in crash-safe order: history append FIRST
-        #    (idempotent via its own batch log), head overwrite SECOND (the
-        #    authoritative "batch applied" marker). A crash between stage
-        #    and publish leaves only invisible unpublished files.
-        if staged_hist is not None and staged_hist["written_buckets"]:
-            table.hist.commit(
-                None,
-                sorted(staged_hist["written_buckets"]),
-                batch_id,
-                metrics={"closed_rows_appended": True},
-                mode="append",
-                staged=staged_hist,
-            )
-        table.head.commit(
-            None,
-            affected,
-            batch_id,
-            recipe=recipe,
-            metrics=metrics,
-            mode="append" if table.mor else "overwrite",
-            staged=staged_head,
-        )
-        return metrics
-
-    def _stage_rewrite(
-        self,
-        table: Scd2Table,
-        j: DataFrame,
-        head_state: DataFrame,
-        new_versions: DataFrame,
-        batch_id: int,
-        affected: list[int],
-        seq_expr,
-    ) -> tuple[dict, dict | None]:
-        """Build the head-rewrite + history frames and stage BOTH tables'
-        data files — fused into ONE write job over the shared cached verdict
-        join for copy-on-write tables (lake.stage_with: one exchange keyed
-        (dest, bucket) instead of two), two overlapping jobs otherwise.
-        Nothing is published yet — the caller publishes manifests in
-        crash-safe order after deriving metrics."""
-        s = self.sys
-
-        # per-key change directives for the head rewrite
-        chg = j.filter(
-            F.col("_verdict").isin("update", "delete", "bump", "reinsert")
-        ).select(
-            F.col(s.key).alias("_c_key"),
-            F.col("_verdict").alias("_c_verdict"),
-            F.col(self.ts_col).cast("timestamp").alias("_c_ts"),
-            seq_expr.alias("_c_seq"),
-        )
-        hs = head_state
-        hj = hs.join(chg, hs[s.key] == chg["_c_key"], "left")
-
-        # closed rows leave the head for the append-only history:
-        #   update   → the superseded active row, closed now
-        #   reinsert → the old tombstone row, moved as-is
-        to_hist = (
-            hj.filter(F.col("_c_verdict").isin("update", "reinsert"))
-            .withColumn(
-                s.finish_ts,
-                F.when(F.col("_c_verdict") == "update", F.col("_c_ts")).otherwise(
-                    F.col(s.finish_ts)
-                ),
-            )
-            .withColumn(
-                s.active,
-                F.when(F.col("_c_verdict") == "update", F.lit(False)).otherwise(
-                    F.col(s.active)
-                ),
-            )
-            .drop("_c_key", "_c_verdict", "_c_ts", "_c_seq")
-        )
-
-        # surviving head rows: untouched keys, delete-closures, seq bumps.
-        # Merge-on-read appends ONLY the changed rows (delete/bump) — the
-        # untouched keys' rows stay on disk and the read-time collapse keeps
-        # them current; copy-on-write must carry them into the rewrite.
-        keep_pred = F.col("_c_verdict").isin("delete", "bump")
-        if not table.mor:
-            keep_pred = F.col("_c_verdict").isNull() | keep_pred
-        kept = (
-            hj.filter(keep_pred)
-            .withColumn(
-                s.load_seq,
-                F.when(
-                    F.col("_c_verdict").isin("delete", "bump"), F.col("_c_seq")
-                ).otherwise(F.col(s.load_seq)),
-            )
-            .withColumn(
-                s.finish_ts,
-                F.when(F.col("_c_verdict") == "delete", F.col("_c_ts")).otherwise(
-                    F.col(s.finish_ts)
-                ),
-            )
-            .withColumn(
-                s.deleted_runid,
-                F.when(
-                    F.col("_c_verdict") == "delete", F.lit(batch_id).cast("long")
-                ).otherwise(F.col(s.deleted_runid)),
-            )
-            .withColumn(
-                s.active,
-                F.when(F.col("_c_verdict") == "delete", F.lit(False)).otherwise(
-                    F.col(s.active)
-                ),
-            )
-            .drop("_c_key", "_c_verdict", "_c_ts", "_c_seq")
-        )
-
-        # additive schema evolution: older head rows may predate new payload
-        # columns — align both frames to the new column set
-        def _align(df: DataFrame) -> DataFrame:
-            for c in new_versions.columns:
-                if c not in df.columns:
-                    df = df.withColumn(c, F.lit(None).cast(dict(new_versions.dtypes)[c]))
-            return df.select(new_versions.columns)
-
-        new_head = _align(kept).unionByName(new_versions)
-        hist_rows = _align(to_hist)
-        if table.mor:
-            # supersession stamp: reads keep each key's max-_cv row
-            new_head = new_head.withColumn(MOR_CV, F.lit(batch_id).cast("long"))
-
-        # stage both tables' data files concurrently (this path now serves
-        # only merge-on-read tables — copy-on-write merges run the fused
-        # single-pass _apply_cow). A resumed torn batch whose history
-        # append already committed skips the hist stage.
-        hist_needed = batch_id not in table.hist.committed_batch_ids()
-        if hist_needed:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_hist = pool.submit(table.hist.stage, hist_rows, affected)
-                f_head = pool.submit(table.head.stage, new_head, affected)
-                staged_hist, staged_head = f_hist.result(), f_head.result()
-        else:
-            staged_hist = None
-            staged_head = table.head.stage(new_head, affected)
-        return staged_head, staged_hist
 
 
 def snapshot_delete_events(
@@ -1501,7 +1141,6 @@ def apply_snapshot(
     merge: "Scd2Merge",
     snapshot: DataFrame,
     batch_id: int,
-    lineage: dict | None = None,
 ) -> dict:
     """Apply a FULL-snapshot batch (the reference's file-load path,
     etl.py:108-187): rows become upsert events at seq=batch_id; keys
@@ -1519,7 +1158,7 @@ def apply_snapshot(
         ev = ev.select(sorted(ev.columns)).unionByName(
             dels.select(sorted(dels.columns)), allowMissingColumns=True
         )
-    return merge.apply_batch(table, ev, batch_id, lineage=lineage)
+    return merge.apply_batch(table, ev, batch_id)
 
 
 def expire_history(table: Scd2Table, before_runid: int) -> dict:

@@ -55,6 +55,9 @@ from pyelt_spark.storage.lake import LakeTable
 
 ALL_PARTS = ["sor", "valuesets", "hubs", "views", "links", "viewlinks"]
 
+# the window volume gate's input-row budget per core of session parallelism
+WINDOW_ROW_BUDGET_PER_CORE = 200_000
+
 
 def _window_sized(spark, total_rows: int) -> bool:
     """Volume gate for window-coalesced replay lanes: coalescing trades
@@ -62,12 +65,12 @@ def _window_sized(spark, total_rows: int) -> bool:
     join), which wins while the per-task state fits comfortably in memory
     and loses once concurrent sort tasks spill (measured: 16M events on 8
     pinned cores ran 202 s windowed vs 135 s per-batch, while 1M events on
-    32 cores ran 13 s windowed vs 20 s per-batch). The budget scales with
-    the session's parallelism — the same stream that must fall back on a
-    2-core leg windows happily on a wide cluster — and is env-tunable for
-    machines with different memory/core ratios."""
-    per_core = int(os.environ.get("SPARK_GRAFT_WINDOW_ROWS_PER_CORE", "200000"))
-    return total_rows <= per_core * max(spark.sparkContext.defaultParallelism, 1)
+    32 cores ran 13 s windowed vs 20 s per-batch). The budget,
+    ``WINDOW_ROW_BUDGET_PER_CORE`` rows per core, scales with the
+    session's parallelism — the same stream that must fall back on a
+    2-core leg windows happily on a wide cluster."""
+    cores = max(spark.sparkContext.defaultParallelism, 1)
+    return total_rows <= WINDOW_ROW_BUDGET_PER_CORE * cores
 
 
 def _where(df: DataFrame, conds: list[str]) -> DataFrame:
@@ -215,17 +218,12 @@ class Pipe:
         op_col: str | None = "op",
         ts_col: str = "ts",
         source_system: str = "events",
-        mor: bool = False,
         validations: list[Any] | None = None,
     ):
         self.spark = spark
         self.root = root
         self.mappings = mappings
         self.num_buckets = num_buckets
-        # merge-on-read sat heads: appends + read-time collapse instead of
-        # copy-on-write rewrites — the dense-update-batch mode (see
-        # operators/scd2.Scd2Table)
-        self.mor = mor
         self.order_by = order_by or ["seq"]
         self.op_col = op_col
         self.ts_col = ts_col
@@ -276,8 +274,7 @@ class Pipe:
             if name in self.sats:
                 continue
             self.sats[name] = Scd2Table(
-                self.spark, os.path.join(self.root, name), self.num_buckets,
-                mor=self.mor,
+                self.spark, os.path.join(self.root, name), self.num_buckets
             )
             self.sat_merges[name] = Scd2Merge(
                 business_keys=list(owner.__bk__) + sat.grain_cols(),
@@ -400,9 +397,7 @@ class Pipe:
             rec = _json.load(f)
         rec["status"] = "finished"
         rec["finished"] = _dt.datetime.now(_dt.timezone.utc).isoformat()
-        rec["tables"] = {
-            k: v for k, v in out.items() if isinstance(v, dict) and k != "lineage"
-        }
+        rec["tables"] = {k: v for k, v in out.items() if isinstance(v, dict)}
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             _json.dump(rec, f)
@@ -486,7 +481,6 @@ class Pipe:
         batch: DataFrame | None,
         batch_id: int,
         parts: list[str] | None = None,
-        lineage: dict[str, Any] | None = None,
         affected: dict[str, list[int]] | None = None,
     ) -> dict[str, Any]:
         """Apply one microbatch through the part sequence (pipeline.py:657:
@@ -509,7 +503,7 @@ class Pipe:
             # 174 s replay) — columnar re-scans are cheap, a deserialized
             # cache costs fill time and GC pressure
             if batch is not None:
-                jobs = self._jobs(self._sor_targets(batch, parts), batch_id, affected, lineage)
+                jobs = self._jobs(self._sor_targets(batch, parts), batch_id, affected)
                 out.update(self._run_jobs(jobs))
             self._runs_finish(run_rec, out)
             return out
@@ -533,7 +527,7 @@ class Pipe:
             # precomputed buckets describe the SOR batch, not view output —
             # view promotions always discover their own buckets
             targets = self._part_targets(part, staged, batch_id)
-            jobs = self._jobs(targets, batch_id, {} if view else affected, lineage)
+            jobs = self._jobs(targets, batch_id, {} if view else affected)
             out.update(self._run_jobs(jobs))
             self._fire(f"after_{part}", staged, batch_id)
 
@@ -708,17 +702,10 @@ class Pipe:
         targets: list[_Target],
         batch_id: int,
         affected: dict[str, list[int]],
-        lineage: dict[str, Any] | None = None,
     ) -> list[tuple[str, Callable[[], dict]]]:
-        return [(t.name, self._job(t, batch_id, affected.get(t.name), lineage)) for t in targets]
+        return [(t.name, self._job(t, batch_id, affected.get(t.name))) for t in targets]
 
-    def _job(
-        self,
-        t: _Target,
-        batch_id: int,
-        aff: list[int] | None,
-        lineage: dict[str, Any] | None = None,
-    ) -> Callable[[], dict]:
+    def _job(self, t: _Target, batch_id: int, aff: list[int] | None) -> Callable[[], dict]:
         """One target's merge of one batch. ``aff == []``: the replay probe
         proved the batch feeds the table no rows, so the merge is skipped
         with zero Spark jobs (None = unknown → the merge discovers its own
@@ -728,7 +715,7 @@ class Pipe:
             # snapshot claims completeness and closes every row
             from pyelt_spark.operators.scd2 import apply_snapshot
 
-            return lambda: apply_snapshot(t.table, t.merge, t.frame, batch_id, lineage=lineage)
+            return lambda: apply_snapshot(t.table, t.merge, t.frame, batch_id)
         if aff == []:
             return lambda: {"skipped_empty_batch": batch_id}
         if not isinstance(t.merge, Scd2Merge):
@@ -736,8 +723,7 @@ class Pipe:
 
         def fn(prepared: dict | None = None) -> dict:
             return t.merge.apply_batch(
-                t.table, t.frame, batch_id, lineage=lineage, affected_buckets=aff,
-                prepared=prepared,
+                t.table, t.frame, batch_id, affected_buckets=aff, prepared=prepared
             )
 
         # one-ahead prefetch hooks for a replay lane: the sat's batch-side
@@ -788,9 +774,9 @@ class Pipe:
         """Small-file maintenance of ONE table: append-mode tables (hubs,
         links, valuesets, sat histories) gain one dir per touched bucket
         per batch; compact any bucket whose manifest references more than
-        ``max_dirs_per_bucket`` dirs (and fold crowded MoR sat heads).
-        Manifest inspection is in-memory — zero cost when nothing is
-        fragmented."""
+        ``max_dirs_per_bucket`` dirs. A sat's copy-on-write head holds one
+        dir per bucket, so its check never compacts. Manifest inspection is
+        in-memory — zero cost when nothing is fragmented."""
         if isinstance(table, Scd2Table):
             table.hist.compact_if_crowded(max_dirs_per_bucket)
             table.compact_head(max_dirs_per_bucket=max_dirs_per_bucket)
@@ -1000,9 +986,9 @@ class Pipe:
             # closed-form pass (the mapping projections are batch-independent,
             # so the window merge slicing the full stream by batch id is
             # identical to the per-batch frames); fall back to the one-ahead
-            # per-batch chain when the volume gate or the closed form refuses
-            # (merge-on-read, out-of-order seqs) — snapshot sats claim
-            # completeness per batch and never window
+            # per-batch chain when the volume gate or the closed form (an
+            # out-of-order seq) refuses — snapshot sats claim completeness
+            # per batch and never window
             probed = t.name in affected[pending[0]]
             ids_t = [b for b in pending if affected[b].get(t.name) != []]
             if not t.snapshot and (

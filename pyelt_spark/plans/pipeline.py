@@ -73,8 +73,7 @@ class TranscriptVault:
     unseen event columns, ``_pipe_for``) and reports results under the
     ``hub``/``sat``/``link`` keys."""
 
-    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32,
-                 mor: bool = False):
+    def __init__(self, spark: SparkSession, root: str, num_buckets: int = 32):
         self.spark = spark
         self.root = root
         self.pipe = Pipe(
@@ -87,7 +86,6 @@ class TranscriptVault:
                 ),
             ],
             num_buckets=num_buckets,
-            mor=mor,
         )
         self.hub = self.pipe.hub_table(Conversation)
         self.sat = self.pipe.sat_table(Conversation.Turn)

@@ -17,7 +17,7 @@ Two execution modes over the transcript vault's one pipe:
 Resume semantics: each LakeTable's commit log records every applied
 batch_id, so a crashed replay restarted from the top skips committed
 batches and continues — the checkpoint carries per-bucket row counts and
-merge metrics (per-partition lineage) for every commit.
+merge metrics for every commit.
 """
 
 from __future__ import annotations

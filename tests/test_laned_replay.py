@@ -10,6 +10,7 @@ pyelt/pipeline.py:657-744)."""
 import datetime as dt
 
 import pytest
+from pyspark.sql import functions as F
 
 from pyelt_spark.plans.pipe import (
     Pipe,
@@ -74,31 +75,47 @@ def test_laned_crash_lanes_at_different_batches(spark, tmp_path):
     ev.unpersist()
 
 
-def test_laned_mor_compaction_matches_serial(spark, tmp_path):
-    """MoR vault through enough batches to cross the head-compaction
-    threshold: the laned replay must compact at the SAME threshold as the
-    serial path (16 dirs/bucket, pipeline.maintain) and land identical sat
-    state. Pins the r5 divergence where the laned sat lane fell through to
-    compact_head's default of 8, silently doubling mid-replay compaction
-    frequency (laned-vs-serial behavior the CoW parity tests can't see)."""
-    # 20 batches → the head's delta chain crosses 16 dirs exactly once
-    ev = transcript_change_events(spark, 400, batch_size=20, seed=11).persist()
+def test_laned_sat_history_compaction_matches_serial(spark, tmp_path):
+    """A late event forces the sat lane onto the per-batch chain, where the
+    lane compacts after every step. The laned replay must compact the sat
+    history at the SAME threshold as the serial ``apply_batch`` loop (16
+    dirs/bucket, ``TranscriptVault.maintain``) and land identical sat
+    state: 20 batches over 2 buckets take each history bucket past 16
+    appended dirs."""
+    ev = transcript_change_events(spark, 400, batch_size=20, seed=11)
+    # late event: a key's first event re-delivered in the batch after the
+    # key's last one, so its seq is older than the key's head row
+    rows = ev.select("conv_id", "turn_idx", "seq", "batch_id").collect()
+    by_key: dict = {}
+    for r in rows:
+        by_key.setdefault((r["conv_id"], r["turn_idx"]), []).append(r)
+    first, last_batch = next(
+        (min(rs, key=lambda r: r["seq"]), max(r["batch_id"] for r in rs))
+        for rs in by_key.values()
+        if len({r["batch_id"] for r in rs}) > 1 and max(r["batch_id"] for r in rs) < 19
+    )
+    late = ev.filter(f"seq = {first['seq']}").limit(1).withColumn(
+        "batch_id", F.lit(last_batch + 1).cast(dict(ev.dtypes)["batch_id"])
+    )
+    ev = ev.unionByName(late).persist()
     try:
-        laned = TranscriptVault(spark, str(tmp_path / "laned"), num_buckets=2, mor=True)
-        MicrobatchRunner(laned).replay(ev)
+        laned = TranscriptVault(spark, str(tmp_path / "laned"), num_buckets=2)
+        out = MicrobatchRunner(laned).replay(ev)
+        assert all("window" not in o["sat"] for o in out), "sat lane did not fall back"
 
-        serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=2, mor=True)
+        serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=2)
         for b in range(20):
             serial.apply_batch(ev.filter(f"batch_id = {b}"), b)
 
         def n_compactions(vault):
             return sum(
                 1
-                for c in vault.sat.head.commits()
-                if c.metrics.get("mor_compaction")
+                for t in (vault.sat.head, vault.sat.hist)
+                for c in t.commits()
+                if c.metrics.get("compaction")
             )
 
-        assert n_compactions(laned) == n_compactions(serial) == 1
+        assert n_compactions(laned) == n_compactions(serial) >= 1
         a = laned.sat.read().drop("_bucket")
         b = serial.sat.read().drop("_bucket")
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

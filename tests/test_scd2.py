@@ -215,6 +215,36 @@ def test_head_is_one_row_per_key(spark, tmp_path):
     assert t.current().first()["_revision"] == 4
 
 
+def test_cow_head_holds_one_dir_per_bucket(spark, tmp_path):
+    """Every merge rewrites each touched head bucket as ONE data dir, after
+    per-batch commits and after a window commit alike — so head
+    compaction is a manifest check that never publishes a version."""
+    from pyelt_spark.sources.events import transcript_change_events
+
+    ev = transcript_change_events(spark, 800, batch_size=200, seed=5).persist()
+    try:
+        t = Scd2Table(spark, str(tmp_path / "sat"), num_buckets=4)
+        m = _merge()
+
+        def assert_one_dir_per_bucket():
+            buckets = t.head.last_commit().buckets
+            assert buckets and all(len(d) == 1 for d in buckets.values()), buckets
+
+        for b in (0, 1):
+            m.apply_batch(t, ev.filter(F.col("batch_id") == b), b)
+            assert_one_dir_per_bucket()
+        res = m.apply_batches(t, ev, "batch_id", [2, 3])
+        assert res is not None and "window" in res[3]
+        assert_one_dir_per_bucket()
+
+        version = t.head.last_commit().version
+        t.compact_head()
+        t.compact_head(max_dirs_per_bucket=1)
+        assert t.head.last_commit().version == version
+    finally:
+        ev.unpersist()
+
+
 def test_expire_history_retention(spark, tmp_path):
     from pyelt_spark.operators.scd2 import expire_history
 
