@@ -104,31 +104,3 @@ class HashRecipe:
     @classmethod
     def from_json(cls, d: dict) -> "HashRecipe":
         return cls(versions={int(k): list(v) for k, v in d.items()})
-
-
-def hash_key_arrow(*cols: str) -> Column:
-    """Arrow-vectorized pandas_udf twin of ``hash_key`` — the north rule's
-    'vectorized Arrow/pandas UDF' formulation. Provided for parity and as
-    the template for hashing logic that genuinely needs Python libraries;
-    the default ``hash_key`` stays JVM-side (whole-stage codegen beats the
-    Arrow transfer for pure sha256). Bit-identical output to ``hash_key``.
-    """
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.StringType())
-    def _sha(*series):  # varargs: no type hints (pandas_udf inference limit)
-        def canon(v):
-            return NULL_TOKEN if v is None else str(v)
-
-        return pd.Series(
-            [
-                hashlib.sha256(SEP.join(canon(v) for v in row).encode()).hexdigest()
-                for row in zip(*series)
-            ]
-        )
-
-    return _sha(*[F.col(c).cast("string") for c in cols])

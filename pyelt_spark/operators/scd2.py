@@ -1,22 +1,25 @@
 """SCD2 merge-apply: hashdiff change detection + valid-from/valid-to upsert.
 
-One microbatch of change events is applied to a key-bucketed satellite in a
-single pass that reproduces, functionally, the reference's per-table load
-cycle (docs/source/05etl_proces.rst "Pipe.Run Detail stappen"):
+A window of change-event batches (one batch is a window of one) is applied
+to a key-bucketed satellite in a single pass that reproduces, functionally,
+the reference's per-table load cycle run once per batch
+(docs/source/05etl_proces.rst "Pipe.Run Detail stappen"):
 
 reference step (file:line)                     → here
 -------------------------------------------------------------------------
 insert-new-or-changed via EXCEPT active
   (pyelt/process/etl.py:156-163)               → hashdiff comparison against
-                                                 the head row
-revision bump self-join (etl.py:168-171)       → head row's revision + 1
+                                                 the key's current row
+revision bump self-join (etl.py:168-171)       → current row's revision + 1
                                                  (no self-join, no agg)
 close-out UPDATE _active/_finish_date
-  (etl.py:174-177)                             → closed head rows move to the
+  (etl.py:174-177)                             → closed rows move to the
                                                  append-only history table
-delete detection (etl.py:180-183)              → 'D' tombstones close the head
-                                                 row in place (_deleted_runid)
-latest-per-key DISTINCT ON (etl.py:576)        → operators.dedup.latest_per_key
+delete detection (etl.py:180-183)              → 'D' tombstones close the
+                                                 current row in place
+                                                 (_deleted_runid)
+latest-per-key DISTINCT ON (etl.py:576)        → operators.dedup.latest_per_key,
+                                                 one winner per (key, batch)
 first-load fast path (etl.py:233-278)          → empty-head bootstrap branch
 
 Storage layout — the 100 TB shape
@@ -26,7 +29,7 @@ An ``Scd2Table`` is a **head / history split**:
 * ``head``  — exactly ONE row per business key: the active version, or a
   delete tombstone (closed row carrying the delete's seq + the key's max
   revision). This is the ONLY data a merge reads and rewrites, and it is
-  bucket-pruned to the batch's keys. State I/O per batch is proportional
+  bucket-pruned to the window's keys. State I/O per window is proportional
   to touched keys, never to accumulated history.
 * ``hist``  — append-only closed versions. Written once per close, never
   read by merges. Full SCD2 history = ``hist ∪ head``.
@@ -36,10 +39,17 @@ out-of-order guard airtight: a late pre-delete update (seq between the
 last content seq and the delete's seq) is detected as stale against the
 tombstone and cannot resurrect a deleted key.
 
+One merge algorithm
+-------------------
+``Scd2Merge.apply_batches`` is the only merge; ``apply_batch`` is a window
+of one. Per key, the merge is a left fold of the per-batch verdict table
+over the key's batch-ordered winners, seeded by its head row — run by a
+JVM higher-order ``aggregate``, so it is exact for any input order (late,
+out-of-order and stale events included) and no path refuses a window.
 The head is copy-on-write only: a merge rewrites each touched bucket in
-one write job (``_apply_cow`` per batch, ``apply_batches`` per window).
-There is no merge-on-read head (append deltas, collapse at read time): on
-the bench stream it lost every time it was measured (README decision 6).
+one write job. There is no merge-on-read head (append deltas, collapse at
+read time): on the bench stream it lost every time it was measured
+(README decision 6).
 
 Everything is JVM column expressions — no per-row Python.
 """
@@ -57,6 +67,12 @@ from pyspark.sql import functions as F
 from pyelt_spark.functions.hashing import HashRecipe, hash_key
 from pyelt_spark.operators.dedup import latest_per_key
 from pyelt_spark.storage.lake import BUCKET_COL, LakeTable, bucket_expr
+
+# the per-batch verdict table, in fold-code order (a winner's code is its
+# index here)
+VERDICTS = ("insert", "update", "reinsert", "delete", "bump", "noop", "stale")
+# the batch-id column ``apply_batch`` adds to make its events a window of one
+_ONE = "__batch"
 
 
 @dataclass
@@ -153,8 +169,7 @@ class Scd2Merge:
 
     def _with_keys_and_hashdiff(self, df: DataFrame, recipe: HashRecipe) -> DataFrame:
         cur = recipe.current_version
-        if self.sys.key not in df.columns:  # don't recompute (and don't break
-            # the aggregate's output partitioning on the key)
+        if self.sys.key not in df.columns:
             df = df.withColumn(self.sys.key, hash_key(*self.business_keys))
         df = df.withColumn(self.sys.hashdiff, recipe.hashdiff_for(cur))
         df = df.withColumn(self.sys.hd_version, F.lit(cur))
@@ -176,78 +191,28 @@ class Scd2Merge:
 
     # ----------------------------------------------------------------- merge
 
-    def _build_batch(
-        self, table: Scd2Table, events: DataFrame, recipe: HashRecipe,
-        do_persist: bool = False,
-    ) -> DataFrame:
-        """Batch-side frame of a merge: latest-per-key dedup, hash key,
-        versioned hashdiffs, bucket, op column — PERSISTED (caller
-        unpersists). Depends on nothing but the event stream and the
-        recipe, so a replay lane can prefetch batch N+1's frame while
-        batch N is still writing (see ``prepare_batch``).
-
-        Dedup groups on the SHA-256 hash key itself: the aggregate's
-        output is then already hash-partitioned on the join key, so the
-        state join in ``apply_batch`` needs NO second exchange of the
-        batch — one shuffle total for dedup + merge. (Costs a sha2 per raw
-        event instead of per winner; at scale a saved shuffle beats
-        recomputed hashes.)"""
-        s = self.sys
-        keyed = events.withColumn(s.key, hash_key(*self.business_keys))
-        batch = latest_per_key(
-            keyed,
-            [s.key],
-            self.order_by,
-            # tiebreak over the ORIGINAL event columns so fork winners match
-            # any dedup of the raw stream (the engine-added _key must not
-            # influence which duplicate survives)
-            tiebreak_cols=[c for c in events.columns if c not in self.order_by],
-        )
-        batch = self._with_keys_and_hashdiff(batch, recipe)
-        batch = batch.withColumn(BUCKET_COL, bucket_expr(s.key, table.num_buckets))
-        op = (
-            F.col(self.op_col)
-            if self.op_col and self.op_col in batch.columns
-            else F.lit("U")
-        )
-        out = batch.withColumn("_op", op)
-        # persist only when the caller materializes the frame ahead of its
-        # merge (prefetch): there the cache IS the hand-off. The inline path
-        # skips it — the frame's one consumer is the merge's full-outer
-        # join, and a columnar cache fill costs ~2-3x the aggregate
-        # it would save (measured at sf1.0: ~15 CPU-s fill vs ~6 CPU-s
-        # reduce-side recompute; guide §5: cache only when recompute is
-        # dearer than the memory pressure).
-        return out.persist() if do_persist else out
-
     def prepare_batch(
-        self, table: Scd2Table, events: DataFrame
-    ) -> dict[str, Any]:
-        """Build and MATERIALIZE the batch-side frame ahead of its merge.
+        self, table: Scd2Table, events: DataFrame, recipe: HashRecipe, batch_col: str
+    ) -> DataFrame:
+        """Batch side of a merge: one winner per (key, batch) — the
+        ``max_by`` aggregate of ``latest_per_key``, whose map-side partial
+        aggregation collapses hot keys before the exchange (README decision
+        1) — then the versioned hashdiffs and the bucket, computed on
+        winners only. Reads no table state and persists nothing.
 
-        The frame is the only part of a merge that reads no table state,
-        so a replay lane can run batch N+1's dedup shuffle concurrently
-        with batch N's head/hist writes (pipelining the lane: the shuffle
-        leaves the per-batch critical path). Returns a handle for
-        ``apply_batch(prepared=...)``, which adopts the frame when the
-        recipe version still matches (schema evolution between prefetch
-        and merge rebuilds instead) and unpersists it either way."""
-        recipe = self._evolved_recipe(events, table)
-        batch = self._build_batch(table, events, recipe, do_persist=True)
-        # the materializing action doubles as the per-bucket key census
-        # (the manifest's batch_keys_per_bucket) — same one job a bare
-        # count() would be
-        rows = batch.groupBy(BUCKET_COL).agg(F.count("*").alias("n")).collect()
-        return {
-            "batch": batch,
-            "bucket_counts": {str(int(r[0])): int(r["n"]) for r in rows},
-            "recipe_version": recipe.current_version,
-            # adoption requires the COLUMN LIST too: two distinct evolutions
-            # can collide on the integer version (e.g. a concurrent commit
-            # adding a different column set), and adopting then would mean
-            # hashdiffs computed over the wrong columns (ADVICE r5)
-            "recipe_cols": list(recipe.current_cols),
-        }
+        The tiebreak runs over the caller's ORIGINAL event columns, so fork
+        winners match any dedup of the raw stream (neither the engine-added
+        ``_key`` nor ``apply_batch``'s batch column may influence which
+        duplicate survives)."""
+        s = self.sys
+        win = latest_per_key(
+            events.withColumn(s.key, hash_key(*self.business_keys)),
+            [s.key, batch_col],
+            self.order_by,
+            tiebreak_cols=[c for c in events.columns if c not in self.order_by and c != _ONE],
+        )
+        win = self._with_keys_and_hashdiff(win, recipe)
+        return win.withColumn(BUCKET_COL, bucket_expr(s.key, table.num_buckets))
 
     def apply_batch(
         self,
@@ -255,312 +220,15 @@ class Scd2Merge:
         events: DataFrame,
         batch_id: int,
         affected_buckets: list[int] | None = None,
-        prepared: dict[str, Any] | None = None,
     ) -> dict[str, Any]:
-        """Apply one microbatch; returns merge metrics. Idempotent: an
-        already-committed batch_id is skipped (exactly-once).
+        """Apply one microbatch: a window of one (see ``apply_batches``).
+        Idempotent: an already-committed batch_id is skipped.
 
         ``affected_buckets``: optional precomputed bucket list (any SUPERSET
         of the batch's true buckets is correct — it only widens the pruned
-        head read). A replay loop computes every batch's buckets in one job
-        up front (``Pipe.replay``), removing a per-batch blocking collect
-        from the merge critical path.
-
-        ``prepared``: optional prefetched batch frame from
-        ``prepare_batch`` (same events slice); adopted only if the recipe
-        version still matches."""
-        if batch_id in table.committed_batch_ids():
-            if prepared is not None:
-                prepared["batch"].unpersist()
-            return {"skipped_duplicate_batch": batch_id}
-
-        recipe = self._evolved_recipe(events, table)
-
-        # 1. batch-side frame: adopt the prefetched one when its recipe is
-        #    still current (the stream's schema didn't evolve between
-        #    prefetch and merge), else build inline
-        if (
-            prepared is not None
-            and prepared["recipe_version"] == recipe.current_version
-            and prepared.get("recipe_cols", recipe.current_cols) == recipe.current_cols
-        ):
-            batch = prepared["batch"]
-        else:
-            if prepared is not None:
-                prepared["batch"].unpersist()
-            batch = self._build_batch(table, events, recipe)
-
-        # 2. affected-bucket discovery → pruned HEAD read (one row per key).
-        #    When the discovery action runs anyway (no precomputed superset)
-        #    it returns the manifest's per-bucket key counts;
-        #    prefetched frames carry the same counts from their own
-        #    materializing action (prepare_batch).
-        bucket_counts: dict[str, int] = {}
-        if affected_buckets is not None:
-            affected = [int(b) for b in affected_buckets]
-            if prepared is not None and batch is prepared.get("batch"):
-                bucket_counts = prepared.get("bucket_counts", {})
-        else:
-            rows = batch.groupBy(BUCKET_COL).agg(F.count("*").alias("n")).collect()
-            affected = [int(r[0]) for r in rows]
-            bucket_counts = {str(int(r[0])): int(r["n"]) for r in rows}
-        first_load = table.last_commit() is None or not table.last_commit().buckets
-
-        # 3. single-pass copy-on-write merge: ONE full-outer join of batch
-        #    and head classified once, exploded into head + history rows,
-        #    staged in ONE write job with observe()-collected metrics —
-        #    no per-merge cache fills, no separate metrics action, no
-        #    second head scan, no head-rewrite join (guide §1.2: remove
-        #    passes before tuning inside them)
-        try:
-            return self._apply_cow(
-                table, batch, batch_id, affected, recipe, first_load, bucket_counts,
-            )
-        finally:
-            batch.unpersist()
-
-    def _apply_cow(
-        self,
-        table: Scd2Table,
-        batch: DataFrame,
-        batch_id: int,
-        affected: list[int],
-        recipe: HashRecipe,
-        first_load: bool,
-        bucket_counts: dict[str, int],
-    ) -> dict[str, Any]:
-        """Single-pass copy-on-write merge.
-
-        ``batch FULL OUTER JOIN head`` yields every row the merge must
-        reason about exactly once (batch is deduped to one row per key,
-        the head holds one row per key): batch-only rows are inserts,
-        both-sides rows classify by hashdiff/stale/op, head-only rows are
-        untouched carry-forwards. Each joined row then emits its outputs
-        directly — at most one new-or-kept HEAD row and at most one
-        closed HISTORY row — through one explode, and one tagged write
-        job stages both tables (lake.stage_tagged). Merge metrics ride
-        the same job as ``observe()`` aggregates, so the whole merge is
-        ONE Spark action (plus the prefetched batch build): the previous
-        shape paid a verdict-join cache fill, a metrics collect, a second
-        head scan and a head-rewrite join per batch — pure overhead at
-        microbatch sizes, measured at 2-3x this path's CPU at sf1.0."""
-        from pyspark.sql import Observation
-
-        s = self.sys
-        payload = recipe.current_cols
-        seq_expr = F.col(self.order_by[0]).cast("long")
-        hist_needed = batch_id not in table.hist.committed_batch_ids()
-        bcols = set(batch.columns)
-        batch_types = dict(batch.dtypes)
-
-        if first_load:
-            head_types: dict[str, str] = {}
-            fo = batch.withColumn("_in_batch", F.lit(True))
-        else:
-            head_state = table.head.read(buckets=affected)
-            head_types = dict(head_state.dtypes)
-            h = head_state.select(
-                *[F.col(c).alias(f"_h_{c}") for c in head_state.columns]
-            )
-            fo = batch.withColumn("_in_batch", F.lit(True)).join(
-                h, F.col(s.key) == F.col(f"_h_{s.key}"), "full"
-            )
-
-        def h_(c: str, t: str):
-            """Head-side column, typed-null when the head predates it."""
-            if c in head_types:
-                return F.col(f"_h_{c}")
-            return F.lit(None).cast(t)
-
-        def pay_t(c: str) -> str:
-            return batch_types.get(c) or head_types.get(c) or "string"
-
-        # classify each joined row ('untouched' for head-only rows).
-        # Hashdiffs compare under the HEAD row's recipe version (schema
-        # evolution): equal old-recipe hashes count as unchanged ONLY if
-        # every column added since is still null.
-        cmp_hd = F.col(s.hashdiff)
-        new_info = F.lit(False)
-        st_hdv = h_(s.hd_version, "int")
-        for v in sorted(recipe.versions):
-            if v != recipe.current_version:
-                cmp_hd = F.when(st_hdv == v, F.col(f"{s.hashdiff}_v{v}")).otherwise(cmp_hd)
-                added = [c for c in recipe.current_cols if c not in recipe.versions[v]]
-                if added:
-                    any_nonnull = None
-                    for c in added:
-                        e = (F.col(c) if c in bcols else F.lit(None)).isNotNull()
-                        any_nonnull = e if any_nonnull is None else (any_nonnull | e)
-                    new_info = F.when(st_hdv == v, any_nonnull).otherwise(new_info)
-
-        in_batch = F.col("_in_batch").isNotNull()
-        is_delete = F.col("_op") == F.lit("D")
-        st_active = h_(s.active, "boolean")
-        has_row = st_active.isNotNull()
-        is_active = st_active == F.lit(True)
-        st_seq = h_(s.load_seq, "long")
-        stale = has_row & (seq_expr < st_seq)
-        unchanged = is_active & ~is_delete & (cmp_hd == h_(s.hashdiff, "string")) & ~new_info
-        bump = unchanged & (seq_expr > st_seq)
-        fo = fo.withColumn(
-            "_verdict",
-            F.when(~in_batch, F.lit("untouched"))
-            .when(stale, F.lit("stale"))
-            .when(is_delete & is_active, F.lit("delete"))
-            .when(is_delete, F.lit("noop"))
-            .when(bump, F.lit("bump"))
-            .when(unchanged, F.lit("noop"))
-            .when(is_active, F.lit("update"))
-            .when(has_row, F.lit("reinsert"))  # tombstone: revision keeps counting
-            .otherwise(F.lit("insert")),
-        )
-
-        vd = F.col("_verdict")
-        is_del, is_bump, is_upd = vd == "delete", vd == "bump", vd == "update"
-        ts_expr = F.col(self.ts_col).cast("timestamp")
-
-        # (name, new-version expr, kept/modified-head expr, history expr)
-        fields = [
-            (s.key, F.col(s.key), h_(s.key, "string"), h_(s.key, "string")),
-            *[
-                (c, F.col(c).cast(pay_t(c)), h_(c, pay_t(c)), h_(c, pay_t(c)))
-                for c in self.business_keys
-            ],
-            *[
-                (
-                    c,
-                    (F.col(c) if c in bcols else F.lit(None)).cast(pay_t(c)),
-                    h_(c, pay_t(c)),
-                    h_(c, pay_t(c)),
-                )
-                for c in payload
-            ],
-            (s.runid, F.lit(batch_id).cast("long"), h_(s.runid, "long"), h_(s.runid, "long")),
-            (
-                s.active,
-                F.lit(True),
-                F.when(is_del, F.lit(False)).otherwise(h_(s.active, "boolean")),
-                F.when(is_upd, F.lit(False)).otherwise(h_(s.active, "boolean")),
-            ),
-            (
-                s.insert_ts,
-                ts_expr,
-                h_(s.insert_ts, "timestamp"),
-                h_(s.insert_ts, "timestamp"),
-            ),
-            (
-                s.finish_ts,
-                F.lit(None).cast("timestamp"),
-                F.when(is_del, ts_expr).otherwise(h_(s.finish_ts, "timestamp")),
-                F.when(is_upd, ts_expr).otherwise(h_(s.finish_ts, "timestamp")),
-            ),
-            (
-                s.deleted_runid,
-                F.lit(None).cast("long"),
-                F.when(is_del, F.lit(batch_id).cast("long")).otherwise(
-                    h_(s.deleted_runid, "long")
-                ),
-                h_(s.deleted_runid, "long"),
-            ),
-            (
-                s.revision,
-                F.coalesce(h_(s.revision, "long") + 1, F.lit(0)).cast("long"),
-                h_(s.revision, "long"),
-                h_(s.revision, "long"),
-            ),
-            (
-                s.load_seq,
-                seq_expr,
-                F.when(is_del | is_bump, seq_expr).otherwise(h_(s.load_seq, "long")),
-                h_(s.load_seq, "long"),
-            ),
-            (s.hashdiff, F.col(s.hashdiff), h_(s.hashdiff, "string"), h_(s.hashdiff, "string")),
-            (s.hd_version, F.col(s.hd_version), h_(s.hd_version, "int"), h_(s.hd_version, "int")),
-            (
-                s.source,
-                F.lit(self.source_system),
-                h_(s.source, "string"),
-                h_(s.source, "string"),
-            ),
-            (BUCKET_COL, F.col(BUCKET_COL), h_(BUCKET_COL, "int"), h_(BUCKET_COL, "int")),
-        ]
-        newset = vd.isin("insert", "update", "reinsert")
-        head_struct = F.when(
-            newset,
-            F.struct(F.lit("a").alias("_dest"), *[e.alias(n) for n, e, _, _ in fields]),
-        ).when(
-            has_row,
-            F.struct(F.lit("a").alias("_dest"), *[e.alias(n) for n, _, e, _ in fields]),
-        )
-        hist_struct = F.when(
-            vd.isin("update", "reinsert"),
-            F.struct(F.lit("b").alias("_dest"), *[e.alias(n) for n, _, _, e in fields]),
-        )
-
-        # the pre-write exchange runs HERE, before explode and observe: it
-        # moves each joined row once (not its two exploded outputs), and it
-        # keeps the CollectMetrics node inside the RESULT stage — observed
-        # metrics from a pre-exchange AQE stage are dropped (measured:
-        # Observation.getRow returns an empty row when the observe sits
-        # upstream of the write's repartition). A head row and its history
-        # row share the key's bucket, so bucket-keyed partitioning still
-        # yields one file per (dest, bucket) dir.
-        fo = fo.repartition(
-            max(len(affected), 1), F.coalesce(F.col(BUCKET_COL), h_(BUCKET_COL, "int"))
-        )
-        obs = Observation()
-        fo = fo.observe(
-            obs,
-            *[
-                F.sum(F.when(vd == v, 1).otherwise(0)).alias(v)
-                for v in ("insert", "update", "reinsert", "delete", "bump", "noop", "stale")
-            ],
-            F.sum(F.when(in_batch, 1).otherwise(0)).alias("deduped"),
-        )
-        branches = [head_struct] + ([hist_struct] if hist_needed else [])
-        tagged = (
-            fo.select(F.explode(F.array(*branches)).alias("_r"))
-            .filter(F.col("_r").isNotNull())
-            .select("_r.*")
-        )
-        out_schema = json.loads(
-            tagged.drop("_dest").schema.json()
-        )
-        staged_head, staged_hist = table.head.stage_tagged(
-            table.hist, tagged, affected, out_schema
-        )
-        m = obs.get
-        metrics = {
-            "batch_id": batch_id,
-            "deduped_keys": int(m["deduped"] or 0),
-            "inserted": int((m["insert"] or 0) + (m["reinsert"] or 0)),
-            "updated": int(m["update"] or 0),
-            "deleted": int(m["delete"] or 0),
-            "unchanged": int((m["noop"] or 0) + (m["bump"] or 0)),
-            "stale": int(m["stale"] or 0),
-            "buckets_read": sorted(affected),
-            "buckets_written": sorted(staged_head["written_buckets"]),
-            "batch_keys_per_bucket": bucket_counts,
-        }
-        if hist_needed and staged_hist["written_buckets"]:
-            table.hist.commit(
-                None,
-                sorted(staged_hist["written_buckets"]),
-                batch_id,
-                metrics={"closed_rows_appended": True},
-                mode="append",
-                staged=staged_hist,
-            )
-        table.head.commit(
-            None,
-            affected,
-            batch_id,
-            recipe=recipe,
-            metrics=metrics,
-            mode="overwrite",
-            staged=staged_head,
-        )
-        return metrics
+        head read); a replay probe computes them for every batch in one job."""
+        one = events.withColumn(_ONE, F.lit(batch_id).cast("long"))
+        return self.apply_batches(table, one, _ONE, [batch_id], affected_buckets)[batch_id]
 
     def apply_batches(
         self,
@@ -569,37 +237,41 @@ class Scd2Merge:
         batch_col: str = "batch_id",
         batch_ids: list[int] | None = None,
         affected_buckets: list[int] | None = None,
-    ) -> dict[int, dict[str, Any]] | None:
-        """Window-coalesced merge: apply EVERY pending batch of a bounded
-        stream in one closed-form pass, byte-identical to applying them
-        sequentially with :meth:`apply_batch` (the catch-up mode of a
-        streaming engine — Structured Streaming's availableNow processes
-        its backlog the same way). Returns per-batch metrics keyed by
-        batch id, or ``None`` when the closed form does not apply and the
-        caller must fall back to the per-batch loop.
+    ) -> dict[int, dict[str, Any]]:
+        """Apply every pending batch of ``batch_ids`` in one pass, exactly
+        as applying them one by one in batch order; returns per-batch
+        metrics keyed by batch id. Committed ids are skipped (exactly-once);
+        the pending ones publish as ONE window commit per table
+        (``Commit.batch_ids``), so crash-resume granularity is the window.
 
-        Semantics (the per-key state machine of apply_batch, unrolled):
-        dedup one winner per (key, batch); order winners by batch; a
-        winner is a NEW VERSION iff it is an upsert whose content differs
-        from the previous effective content (a delete's content is NULL —
-        exactly the oracle's lag-chain form); the first comparison runs
-        against the head row under ITS recipe version; deletes close the
-        currently-active version (first delete per version group);
-        unchanged upserts with a later seq bump the head's _seq. Closed
-        versions land in history with the closing event's timestamp; the
-        final version (or tombstone) lands in the head; untouched head
-        rows carry forward. Commits publish once per table with the whole
-        id window (`Commit.batch_ids`) — crash-resume granularity becomes
-        the window, exactly-once is preserved.
+        Per key the merge is a left fold of the per-batch verdict table
+        over the key's batch-ordered winners, seeded by its head row:
 
-        Precondition (checked; else ``None``): per key the winners' seqs
-        are non-decreasing in batch order and ≥ the head row's _seq — the
-        sequential stale guard then provably never fires, so the chain
-        form is exact. Out-of-order tails fall back to the per-batch path,
-        which handles them row by row."""
-        from pyspark.sql import Window
+        =========  ====================================  ==================
+        verdict    when (first match)                    effect
+        =========  ====================================  ==================
+        stale      seq < current row's ``_seq``          none
+        delete     'D' against an active row             close in place
+        noop       'D' against a tombstone / no row      none (``_seq`` kept)
+        bump       unchanged content, newer seq          ``_seq`` = seq
+        noop       unchanged content, same seq           none
+        update     changed content, active row           close → hist, new
+        reinsert   upsert against a tombstone            tombstone → hist, new
+        insert     no row                                new, revision 0
+        =========  ====================================  ==================
 
-        from pyelt_spark.operators.dedup import _tiebreak
+        "Unchanged" compares under the current row's recipe version (schema
+        evolution): equal old-recipe hashes count as unchanged only if every
+        column added since is null. A closed row's ``_finish_ts`` is its
+        closing event's timestamp.
+
+        Shape: winners (``prepare_batch``) and the pruned head rows are
+        unioned and bucket-partitioned in ONE exchange; each key's winners
+        are collected and folded (``F.aggregate``) into its new head row,
+        its closed history rows and one verdict per winner; one tagged
+        write job stages head and history, and the per-batch verdict census
+        rides that job as ``observe()`` aggregates."""
+        from pyspark.sql import Observation
 
         s = self.sys
         done = table.committed_batch_ids()
@@ -610,471 +282,201 @@ class Scd2Merge:
         pending = sorted(b for b in all_ids if b not in done)
         if not pending:
             return out
-        if len(pending) == 1:
-            out[pending[0]] = self.apply_batch(
-                table,
-                events.filter(F.col(batch_col) == pending[0]),
-                pending[0],
-                affected_buckets=affected_buckets,
-            )
-            return out
 
         ev = events.filter(F.col(batch_col).isin(pending))
         recipe = self._evolved_recipe(ev, table)
-        payload = recipe.current_cols
-        seq_expr = F.col(self.order_by[0]).cast("long")
-        keyed = ev.withColumn(s.key, hash_key(*self.business_keys))
-        keyed = keyed.withColumn(BUCKET_COL, bucket_expr(s.key, table.num_buckets))
-        op = (
-            F.col(self.op_col)
-            if self.op_col and self.op_col in keyed.columns
-            else F.lit("U")
-        )
-        keyed = (
-            keyed.withColumn("_op", op)
-            .withColumn("_b", F.col(batch_col).cast("long"))
-            .withColumn("_seql", seq_expr)
-            .withColumn(
-                "_tb", _tiebreak(ev, self.order_by, [c for c in ev.columns if c not in self.order_by])
-            )
-        )
-        bcols = set(ev.columns)
-        batch_types = dict(ev.dtypes)
-
-        # one winner per (key, batch): last row of its batch segment under
-        # the per-key (batch, seq, tiebreak) sort — identical winner to
-        # latest_per_key's max_by within each batch slice. This window's
-        # exchange is the pass's ONE data shuffle; every later window and
-        # group-by reuses the hash(_key) partitioning and the sort. The
-        # versioned hashdiffs are computed AFTER winner selection (same
-        # order as the per-batch path): losers never get hashed and the
-        # 64-char digests never cross the exchange (guide §2.3).
-        wsort = Window.partitionBy(s.key).orderBy(
-            "_b", *[F.col(c) for c in self.order_by], "_tb"
-        )
-        nxt_b = F.lead("_b").over(wsort)
-        win = keyed.withColumn(
-            "_is_w", nxt_b.isNull() | (nxt_b != F.col("_b"))
-        ).filter(F.col("_is_w"))
-        win = self._with_keys_and_hashdiff(win, recipe)
-
+        win = self.prepare_batch(table, ev, recipe, batch_col)
         if affected_buckets is not None:
-            affected = [int(b) for b in affected_buckets]
+            affected = sorted(int(b) for b in affected_buckets)
         else:
-            affected = [
-                int(r[0]) for r in win.select(BUCKET_COL).distinct().collect()
-            ]
+            bucket = bucket_expr(hash_key(*self.business_keys), table.num_buckets)
+            affected = sorted(int(r[0]) for r in ev.select(bucket).distinct().collect())
         first_load = table.last_commit() is None or not table.last_commit().buckets
-        head_state = (
-            None if first_load else table.head.read(buckets=affected)
-        )
-        head_types = dict(head_state.dtypes) if head_state is not None else {}
-
-        def h_(c: str, t: str):
-            if c in head_types:
-                return F.col(f"_h_{c}")
-            return F.lit(None).cast(t)
+        head = None if first_load else table.head.read(buckets=affected)
+        head_types = dict(head.dtypes) if head is not None else {}
+        batch_types = dict(ev.dtypes)
+        bcols = set(ev.columns)
+        payload = recipe.current_cols
+        cur = recipe.current_version
+        old = [v for v in sorted(recipe.versions) if v != cur]
 
         def pay_t(c: str) -> str:
             return batch_types.get(c) or head_types.get(c) or "string"
 
-        if head_state is not None:
-            h = head_state.select(
-                *[F.col(c).alias(f"_h_{c}") for c in head_state.columns]
-            )
-            fo = win.join(h, F.col(s.key) == F.col(f"_h_{s.key}"), "full")
-        else:
-            fo = win
+        # The fold is built as ONE SQL expression string: as Column objects
+        # it took ~8k py4j round trips per merge (measured: ~1 s of Python-
+        # side time per 2k-event commit), as text it is one parse in the JVM.
+        def q(name: str) -> str:
+            return "`" + name.replace("`", "``") + "`"
 
-        # the WRITE's bucket exchange runs here, right after the join: a
-        # bucket is a function of the key, so hash(bucket) partitioning
-        # clusters keys, and every later window/group-by keyed
-        # (bucket, key) is exchange-free — the whole chain, the
-        # version-group aggregation, the output structs and the write all
-        # live in ONE post-exchange stage. That is also what makes the
-        # observe()-collected metrics safe (observed metrics from a
-        # pre-exchange AQE stage come back empty — see _apply_cow).
-        fo = fo.withColumn(
-            "_bkt", F.coalesce(F.col(BUCKET_COL), h_(BUCKET_COL, "int"))
-        ).repartition(max(len(affected), 1), F.col("_bkt"))
+        def bat(c: str) -> str:
+            return q(c) if c in bcols else "NULL"
 
-        kcol = F.coalesce(F.col(s.key), h_(s.key, "string"))
-        wk = Window.partitionBy("_bkt", kcol).orderBy("_b")
-        wku = wk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        wkp = wk.rowsBetween(Window.unboundedPreceding, -1)
-        wka = Window.partitionBy("_bkt", kcol)
+        # one row layout for the fold state, its outputs and the write:
+        # the stored columns between a destination tag ('a' head, 'b' hist,
+        # 'c' verdict-only marker) and the winner's batch + verdict code
+        stored = [
+            (s.key, "string"),
+            *[(c, pay_t(c)) for c in self.business_keys],
+            *[(c, pay_t(c)) for c in payload],
+            (s.runid, "long"),
+            (s.active, "boolean"),
+            (s.insert_ts, "timestamp"),
+            (s.finish_ts, "timestamp"),
+            (s.deleted_runid, "long"),
+            (s.revision, "long"),
+            (s.load_seq, "long"),
+            (s.hashdiff, "string"),
+            (s.hd_version, "int"),
+            (s.source, "string"),
+            (BUCKET_COL, "int"),
+        ]
+        layout = [("_dest", "string"), *stored, ("_cb", "long"), ("_vc", "int")]
+        row_t = "struct<" + ",".join(f"{q(n)}:{t}" for n, t in layout) + ">"
 
-        h0_exists = h_(s.active, "boolean").isNotNull()
-        h0_active = h_(s.active, "boolean") == F.lit(True)
-        is_D = F.col("_op") == F.lit("D")
-        is_first = F.lag("_b").over(wk).isNull()
+        def row(vals: dict[str, str]) -> str:
+            """A layout row from SQL expressions; unnamed fields are NULL."""
+            return "named_struct(" + ", ".join(
+                f"'{n}', CAST({vals.get(n, 'NULL')} AS {t})" for n, t in layout
+            ) + ")"
 
-        # content chain (oracle form): a delete's effective content is NULL
-        e = F.when(is_D, F.lit(None).cast("string")).otherwise(F.col(s.hashdiff))
-        # first comparison vs h0 under the HEAD row's recipe version
-        cmp_first = F.col(s.hashdiff)
-        new_info_first = F.lit(False)
-        st_hdv = h_(s.hd_version, "int")
-        for v in sorted(recipe.versions):
-            if v != recipe.current_version:
-                cmp_first = F.when(
-                    st_hdv == v, F.col(f"{s.hashdiff}_v{v}")
-                ).otherwise(cmp_first)
-                added = [c for c in recipe.current_cols if c not in recipe.versions[v]]
-                if added:
-                    any_nonnull = None
-                    for c in added:
-                        x = (F.col(c) if c in bcols else F.lit(None)).isNotNull()
-                        any_nonnull = x if any_nonnull is None else (any_nonnull | x)
-                    new_info_first = F.when(st_hdv == v, any_nonnull).otherwise(new_info_first)
-        first_unchanged = (
-            h0_active
-            & ~is_D
-            & (cmp_first == h_(s.hashdiff, "string"))
-            & ~new_info_first
-        )
-        later_unchanged = ~is_D & F.col(s.hashdiff).eqNullSafe(F.lag(e).over(wk))
-        unchanged = F.when(is_first, first_unchanged).otherwise(later_unchanged)
-        applied = (~is_D) & ~F.coalesce(unchanged, F.lit(False))
-
-        c1 = fo.withColumn("_app", applied).withColumn("_unch", F.coalesce(unchanged, F.lit(False)))
-        gid = F.sum(F.col("_app").cast("int")).over(wku)
-        rmax = F.max("_seql").over(wku)
-        c2 = c1.withColumn("_gid", gid).withColumn("_rmax", rmax)
-        state_seq_before = F.greatest(F.lag("_rmax").over(wk), h_(s.load_seq, "long"))
-        runningD = F.sum(is_D.cast("int")).over(wku)
-        c3 = (
-            c2.withColumn("_ssb", state_seq_before)
-            .withColumn("_rd", runningD)
-            .withColumn(
-                "_lard", F.max(F.when(F.col("_app"), runningD)).over(wku)
-            )
-        )
-        bump = F.col("_unch") & (F.col("_seql") > F.col("_ssb"))
-        first_D = is_D & (F.col("_rd") == F.coalesce(F.col("_lard"), F.lit(0)) + 1)
-        closing_D = first_D & F.when(F.col("_gid") > 0, F.lit(True)).otherwise(h0_active)
-        c4 = c3.withColumn("_bump", bump).withColumn("_cd", closing_D)
-        runningCD = F.sum(F.col("_cd").cast("int")).over(wku)
-        c5 = c4.withColumn("_rcd", runningCD).withColumn(
-            "_pacd", F.max(F.when(F.col("_app"), F.col("_rcd"))).over(wkp)
-        )
-        gap_closed = (F.col("_rcd") - F.coalesce(F.col("_pacd"), F.lit(0))) >= 1
-        prior_exists = (F.col("_gid") > 1) | h0_exists
-        prior_active = F.when(F.col("_gid") > 1, ~gap_closed).otherwise(
-            h0_exists & h0_active & ~gap_closed
-        )
-        verdict = (
-            F.when(
-                F.col("_app"),
-                F.when(~prior_exists, F.lit("insert"))
-                .when(prior_active, F.lit("update"))
-                .otherwise(F.lit("reinsert")),
-            )
-            .when(F.col("_cd"), F.lit("delete"))
-            .when(is_D, F.lit("noop"))
-            .when(F.col("_bump"), F.lit("bump"))
-            .otherwise(F.lit("noop"))
-        )
-        stale_like = (
-            (F.col("_seql") < F.lag("_seql").over(wk))
-            | (is_first & h0_exists & (F.col("_seql") < h_(s.load_seq, "long")))
-        )
-        c6 = c5.withColumn("_verdict", verdict).withColumn(
-            "_viol", F.coalesce(stale_like, F.lit(False)).cast("int")
-        )
-
-        # Per-batch verdict census + monotonicity check. Small windows ride
-        # the WRITE job itself as observe() aggregates (7 x |pending| sums —
-        # zero extra jobs; the staged files are discarded un-published if a
-        # violation shows up). Large windows (many small batches — the
-        # aggregate-expression count would bloat codegen) pay one explicit
-        # check job instead, which the write's shuffle reuse then builds on.
-        _VERDS = ("insert", "update", "reinsert", "delete", "bump", "noop")
-        use_obs = len(pending) <= 16
-        vmap: dict[int, dict[str, int]] = {b: {} for b in pending}
-        if not use_obs:
-            chk = (
-                c6.filter(F.col("_b").isNotNull())
-                .groupBy("_b", "_verdict")
-                .agg(F.count("*").alias("n"), F.sum("_viol").alias("v"))
-                .collect()
-            )
-            if sum(r["v"] for r in chk) > 0:
-                return None
-            for r in chk:
-                vmap[int(r["_b"])][r["_verdict"]] = r["n"]
-
-        # group-0 closing-delete / bump info as per-key constants (the h0
-        # closure may have to be emitted from the v==1 row when no gid-0
-        # group row exists)
-        cd0 = F.min(
-            F.when(
-                F.col("_cd") & (F.col("_gid") == 0),
-                F.struct(F.col("_b").alias("b"), F.col(self.ts_col).cast("timestamp").alias("ts"), F.col("_seql").alias("seq")),
-            )
-        ).over(wka)
-        t0bump = F.max(
-            F.when((F.col("_gid") == 0) & F.col("_bump"), F.col("_seql"))
-        ).over(wka)
-        c7 = c6.withColumn("_cd0", cd0).withColumn("_t0b", t0bump)
-        obs = None
-        if use_obs:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            c7 = c7.observe(
-                obs,
-                *[
-                    F.sum(
-                        F.when(
-                            (F.col("_b") == b) & (F.col("_verdict") == v), 1
-                        ).otherwise(0)
-                    ).alias(f"m_{b}_{v}")
-                    for b in pending
-                    for v in _VERDS
-                ],
-                F.sum("_viol").alias("viol_total"),
-            )
-
-        ver_struct = F.when(
-            F.col("_app"),
-            F.struct(
-                F.col("_b").alias("b"),
-                F.col(self.ts_col).cast("timestamp").alias("ts"),
-                *[
-                    (F.col(c) if c in bcols else F.lit(None)).cast(pay_t(c)).alias(f"p_{i}")
-                    for i, c in enumerate(payload)
-                ],
-                *[F.col(c).cast(pay_t(c)).alias(f"k_{i}") for i, c in enumerate(self.business_keys)],
-                F.col(s.hashdiff).alias("hd"),
-                F.col(s.hd_version).alias("hdv"),
-                F.col(BUCKET_COL).alias("bkt"),
-            ),
-        )
-        grp_cd = F.when(
-            F.col("_cd"),
-            F.struct(F.col("_b").alias("b"), F.col(self.ts_col).cast("timestamp").alias("ts"), F.col("_seql").alias("seq")),
-        )
-        trans_seq = F.when(
-            F.col("_app") | F.col("_bump") | F.col("_cd"), F.col("_seql")
-        )
-        key_expr = F.coalesce(F.col(s.key), h_(s.key, "string"))
-        hcols = list(head_types)
-        vrows = (
-            c7.groupBy(
-                F.col("_bkt"), key_expr.alias("_k"), F.col("_gid").alias("_g")
-            )
-            .agg(
-                F.min(ver_struct).alias("_ver"),
-                F.min(grp_cd).alias("_gcd"),
-                F.max(trans_seq).alias("_tseq"),
-                F.min(F.struct(*[h_(c, "string").alias(f"h_{i}") for i, c in enumerate(hcols)])).alias("_h")
-                if hcols
-                else F.min(F.lit(None).cast("int")).alias("_h"),
-                F.min("_cd0").alias("_c0"),
-                F.max("_t0b").alias("_b0"),
-            )
-        )
-        wv = Window.partitionBy("_bkt", "_k")
-        wvo = Window.partitionBy("_bkt", "_k").orderBy("_g")
-        vr = (
-            vrows.withColumn("_m", F.max("_g").over(wv))
-            .withColumn("_nxt_ts", F.lead(F.col("_ver.ts")).over(wvo))
-        )
-
-        def hv(c: str, t: str):
-            if c in head_types:
-                return F.col(f"_h.h_{hcols.index(c)}").cast(head_types[c])
-            return F.lit(None).cast(t)
-
-        base_rev = F.when(hv(s.active, "boolean").isNotNull(), hv(s.revision, "long")).otherwise(F.lit(-1))
-        h0x = hv(s.active, "boolean").isNotNull()
-        h0a = hv(s.active, "boolean") == F.lit(True)
-
-        def out_struct(dest: str, fields: dict):
-            ordered = [
-                (s.key, "string"),
-                *[(c, pay_t(c)) for c in self.business_keys],
-                *[(c, pay_t(c)) for c in payload],
-                (s.runid, "long"),
-                (s.active, "boolean"),
-                (s.insert_ts, "timestamp"),
-                (s.finish_ts, "timestamp"),
-                (s.deleted_runid, "long"),
-                (s.revision, "long"),
-                (s.load_seq, "long"),
-                (s.hashdiff, "string"),
-                (s.hd_version, "int"),
-                (s.source, "string"),
-                (BUCKET_COL, "int"),
-            ]
-            return F.struct(
-                F.lit(dest).alias("_dest"),
-                *[fields[n].cast(t).alias(n) for n, t in ordered],
-            )
-
-        # field maps: version-derived row (head or hist variant) and
-        # h0-derived row (kept head / closed hist)
-        vts, vb = F.col("_ver.ts"), F.col("_ver.b")
-        gcd = F.col("_gcd")
-        ver_fields = lambda active, fin, delr, seq, rev: {  # noqa: E731
-            s.key: F.col("_k"),
-            **{c: F.col(f"_ver.k_{i}") for i, c in enumerate(self.business_keys)},
-            **{c: F.col(f"_ver.p_{i}") for i, c in enumerate(payload)},
-            s.runid: vb,
-            s.active: active,
-            s.insert_ts: vts,
-            s.finish_ts: fin,
-            s.deleted_runid: delr,
-            s.revision: rev,
-            s.load_seq: seq,
-            s.hashdiff: F.col("_ver.hd"),
-            s.hd_version: F.col("_ver.hdv"),
-            s.source: F.lit(self.source_system),
-            BUCKET_COL: F.col("_ver.bkt"),
+        # batch side: one struct per winner, the fields the fold reads
+        is_d = f"{q(self.op_col)} = 'D'" if self.op_col and self.op_col in bcols else "false"
+        w = {
+            "b": f"CAST({q(batch_col)} AS long)",
+            "sq": f"CAST({q(self.order_by[0])} AS long)",
+            "ts": f"CAST({q(self.ts_col)} AS timestamp)",
+            "d": f"coalesce({is_d}, false)",
+            **{f"k{i}": f"CAST({q(c)} AS {pay_t(c)})" for i, c in enumerate(self.business_keys)},
+            **{f"p{i}": f"CAST({bat(c)} AS {pay_t(c)})" for i, c in enumerate(payload)},
+            "hd": q(s.hashdiff),
+            "bkt": q(BUCKET_COL),
         }
-        h0_fields = lambda active, fin, delr, seq: {  # noqa: E731
-            s.key: F.col("_k"),
-            **{c: hv(c, pay_t(c)) for c in self.business_keys},
-            **{c: hv(c, pay_t(c)) for c in payload},
-            s.runid: hv(s.runid, "long"),
-            s.active: active,
-            s.insert_ts: hv(s.insert_ts, "timestamp"),
-            s.finish_ts: fin,
-            s.deleted_runid: delr,
-            s.revision: hv(s.revision, "long"),
-            s.load_seq: seq,
-            s.hashdiff: hv(s.hashdiff, "string"),
-            s.hd_version: hv(s.hd_version, "int"),
-            s.source: hv(s.source, "string"),
-            BUCKET_COL: hv(BUCKET_COL, "int"),
-        }
-
-        rev = base_rev + F.col("_g")
-        closed = gcd.isNotNull()
-        ver_head = out_struct(
-            "a",
-            ver_fields(
-                F.when(closed, F.lit(False)).otherwise(F.lit(True)),
-                F.when(closed, gcd["ts"]),
-                F.when(closed, gcd["b"]),
-                F.col("_tseq"),
-                rev,
-            ),
-        )
-        ver_hist = out_struct(
-            "b",
-            ver_fields(
-                F.lit(False),
-                F.when(closed, gcd["ts"]).otherwise(F.col("_nxt_ts")),
-                F.when(closed, gcd["b"]),
-                F.col("_tseq"),
-                rev,
-            ),
-        )
-        c0 = F.col("_c0")
-        h0_closed = c0.isNotNull()
-        h0_seq_kept = F.greatest(hv(s.load_seq, "long"), F.col("_b0"))
-        # h0 emitted as HIST from the v==1 row (active h0 closed by v1 or by
-        # a group-0 delete; tombstone h0 moved as-is)
-        h0_hist = out_struct(
-            "b",
-            h0_fields(
-                F.lit(False),
-                F.when(~h0a, hv(s.finish_ts, "timestamp"))
-                .when(h0_closed, c0["ts"])
-                .otherwise(F.col("_ver.ts")),
-                F.when(~h0a, hv(s.deleted_runid, "long")).when(h0_closed, c0["b"]),
-                F.when(~h0a, hv(s.load_seq, "long"))
-                .when(h0_closed, c0["seq"])
-                .otherwise(h0_seq_kept),
-            ),
-        )
-        # h0 kept in HEAD when no version applied (m==0): group-0 deletes /
-        # bumps still mutate it
-        h0_head = out_struct(
-            "a",
-            h0_fields(
-                F.when(h0_closed, F.lit(False)).otherwise(hv(s.active, "boolean")),
-                F.when(h0_closed & h0a, c0["ts"]).otherwise(hv(s.finish_ts, "timestamp")),
-                F.when(h0_closed & h0a, c0["b"]).otherwise(hv(s.deleted_runid, "long")),
-                F.when(h0_closed & h0a, c0["seq"]).otherwise(h0_seq_kept),
-            ),
-        )
-        untouched = out_struct(
-            "a",
-            h0_fields(
-                hv(s.active, "boolean"),
-                hv(s.finish_ts, "timestamp"),
-                hv(s.deleted_runid, "long"),
-                hv(s.load_seq, "long"),
-            ),
+        for v in old:
+            added = [c for c in payload if c not in recipe.versions[v]]
+            w[f"hd{v}"] = q(f"{s.hashdiff}_v{v}")
+            w[f"ni{v}"] = " OR ".join([f"{bat(c)} IS NOT NULL" for c in added] or ["false"])
+        w_struct = "named_struct(" + ", ".join(f"'{k}', {e}" for k, e in w.items()) + ")"
+        keyed = [F.col(BUCKET_COL).alias("_bkt"), F.col(s.key).alias("_k")]
+        u = win.select(*keyed, F.expr(w_struct).alias("_w"))
+        if head is not None:
+            hrow = row({"_dest": "'a'", **{n: q(n) for n, _ in stored if n in head_types}})
+            u = u.unionByName(
+                head.select(*keyed, F.expr(hrow).alias("_h")), allowMissingColumns=True
+            )
+        # the pass's one exchange after the dedup: head and winner rows of a
+        # bucket meet in one task, so the per-key grouping below needs no
+        # further shuffle and each (dest, bucket) dir gets one file. The
+        # observe() sits downstream of it, in the result stage — observed
+        # metrics from a pre-exchange AQE stage come back empty.
+        u = u.repartition(max(len(affected), 1), "_bkt")
+        grouped = u.groupBy("_bkt", "_k").agg(
+            F.array_sort(F.collect_list("_w")).alias("_ws"),
+            (F.first("_h", ignorenulls=True) if head is not None else F.lit(None).cast(row_t))
+            .alias("_h0"),
         )
 
-        g = F.col("_g")
-        m = F.col("_m")
-        head_or_hist = (
-            F.when(g.isNull(), untouched)
-            .when((g == 0) & (m == 0) & h0x, h0_head)
-            .when((g >= 1) & (g == m), ver_head)
-            .when((g >= 1), ver_hist)
+        # the fold step (acc = the key's current row ``h`` + its emitted
+        # rows ``o``; w = the next winner): the verdict table, first match
+        cur_row = {n: f"acc.h.{q(n)}" for n, _ in layout}
+
+        def h(n: str) -> str:
+            return cur_row[n]
+
+        def to(head_row: str, verdict: str, emit: str | None = None) -> str:
+            vc = VERDICTS.index(verdict)
+            if emit is None:  # a verdict-only marker
+                emit = row({"_dest": "'c'", "_cb": "w.b", "_vc": str(vc)})
+            return f"named_struct('h', {head_row}, 'o', concat(acc.o, array({emit})))"
+
+        def closed(verdict: str, **vals: str) -> str:
+            vc = VERDICTS.index(verdict)
+            return row({**cur_row, "_dest": "'b'", "_cb": "w.b", "_vc": str(vc), **vals})
+
+        act = f"coalesce({h(s.active)}, false)"
+        cmp_hd, new_info = "w.hd", "false"
+        for v in old:
+            cmp_hd = f"CASE WHEN {h(s.hd_version)} = {v} THEN w.hd{v} ELSE {cmp_hd} END"
+            new_info = f"CASE WHEN {h(s.hd_version)} = {v} THEN w.ni{v} ELSE {new_info} END"
+        unchanged = f"{act} AND NOT w.d AND {cmp_hd} = {h(s.hashdiff)} AND NOT ({new_info})"
+        source = "'" + self.source_system.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        new = row({
+            "_dest": "'a'",
+            s.key: "_k",
+            **{c: f"w.k{i}" for i, c in enumerate(self.business_keys)},
+            **{c: f"w.p{i}" for i, c in enumerate(payload)},
+            s.runid: "w.b",
+            s.active: "true",
+            s.insert_ts: "w.ts",
+            s.revision: f"coalesce({h(s.revision)} + 1, 0)",
+            s.load_seq: "w.sq",
+            s.hashdiff: "w.hd",
+            s.hd_version: str(cur),
+            s.source: source,
+            BUCKET_COL: "w.bkt",
+        })
+        deleted = row({
+            **cur_row, s.active: "false", s.finish_ts: "w.ts",
+            s.deleted_runid: "w.b", s.load_seq: "w.sq",
+        })
+        step = " ".join([
+            f"CASE WHEN {h(s.active)} IS NOT NULL AND w.sq < {h(s.load_seq)}",
+            f"THEN {to('acc.h', 'stale')}",
+            f"WHEN w.d AND {act} THEN {to(deleted, 'delete')}",
+            f"WHEN w.d THEN {to('acc.h', 'noop')}",
+            f"WHEN {unchanged} AND w.sq > {h(s.load_seq)}",
+            f"THEN {to(row({**cur_row, s.load_seq: 'w.sq'}), 'bump')}",
+            f"WHEN {unchanged} THEN {to('acc.h', 'noop')}",
+            f"WHEN {act} THEN",
+            to(new, "update", closed("update", **{s.active: "false", s.finish_ts: "w.ts"})),
+            f"WHEN {h(s.active)} IS NOT NULL THEN {to(new, 'reinsert', closed('reinsert'))}",
+            f"ELSE {to(new, 'insert')} END",
+        ])
+        folded = F.expr(
+            f"aggregate(_ws, named_struct('h', _h0, 'o', CAST(array() AS array<{row_t}>)), "
+            f"(acc, w) -> {step}, acc -> concat(acc.o, array(acc.h)))"
         )
-        second = F.when((g == 1) & h0x, h0_hist)
-        hist_committed = set()
-        for b in pending:
-            if b in table.hist.committed_batch_ids():
-                hist_committed.add(b)
-        hist_needed = len(hist_committed) < len(pending)
-        # no write-side exchange: the frame has been bucket-partitioned
-        # since right after the join, so each (dest, bucket) dir receives
-        # exactly one task's file
-        tagged = (
-            vr.select(F.explode(F.array(head_or_hist, second)).alias("_r"))
-            .filter(F.col("_r").isNotNull())
+        rows = grouped.select(F.explode(folded).alias("_r")).filter(F.col("_r").isNotNull())
+        rows = rows.select("_r.*")
+        obs = Observation()
+        rows = rows.observe(
+            obs,
+            *[
+                F.expr(f"count_if(_cb = {b} AND _vc = {i}) AS `{b}_{v}`")
+                for b in pending
+                for i, v in enumerate(VERDICTS)
+            ],
         )
-        if not hist_needed:
-            tagged = tagged.filter(F.col("_r._dest") == "a")
-        tagged = tagged.select("_r.*")
+        # history rows tagged with a closing batch the history log already
+        # holds were appended before a crash cut the window short of its
+        # head commit: a resumed window must not append them twice
+        hist_done = sorted(set(pending) & table.hist.committed_batch_ids())
+        keep = F.col("_dest") != "c"
+        if hist_done:
+            keep = keep & ~((F.col("_dest") == "b") & F.col("_cb").isin(hist_done))
+        tagged = rows.filter(keep).drop("_cb", "_vc")
         out_schema = json.loads(tagged.drop("_dest").schema.json())
         staged_head, staged_hist = table.head.stage_tagged(
             table.hist, tagged, affected, out_schema
         )
-        if obs is not None:
-            mrow = obs.get
-            if int(mrow.get("viol_total") or 0) > 0:
-                # out-of-order tail detected AFTER staging: the staged dirs
-                # were never published (manifests are the source of truth) —
-                # drop them and hand the window back for per-batch replay
-                import shutil
-
-                for t_, st_ in ((table.head, staged_head), (table.hist, staged_hist)):
-                    shutil.rmtree(
-                        os.path.join(t_.path, st_["rel_dir"]), ignore_errors=True
-                    )
-                return None
-            for b in pending:
-                for v in _VERDS:
-                    n = mrow.get(f"m_{b}_{v}") or 0
-                    if n:
-                        vmap[b][v] = int(n)
-
-        metrics_by_batch: dict[int, dict[str, Any]] = {}
+        m = obs.get
+        window = [pending[0], pending[-1]]
+        written = sorted(staged_head["written_buckets"])
         for b in pending:
-            vm = vmap.get(b, {})
-            metrics_by_batch[b] = {
+            n = {v: int(m.get(f"{b}_{v}") or 0) for v in VERDICTS}
+            out[b] = {
                 "batch_id": b,
-                "deduped_keys": sum(vm.values()),
-                "inserted": vm.get("insert", 0) + vm.get("reinsert", 0),
-                "updated": vm.get("update", 0),
-                "deleted": vm.get("delete", 0),
-                "unchanged": vm.get("noop", 0) + vm.get("bump", 0),
-                "stale": 0,
-                "buckets_read": sorted(affected),
-                "buckets_written": sorted(staged_head["written_buckets"]),
-                "batch_keys_per_bucket": {},
-                "window": [pending[0], pending[-1]],
+                "deduped_keys": sum(n.values()),
+                "inserted": n["insert"] + n["reinsert"],
+                "updated": n["update"],
+                "deleted": n["delete"],
+                "unchanged": n["noop"] + n["bump"],
+                "stale": n["stale"],
+                "buckets_read": affected,
+                "buckets_written": written,
+                "window": window,
             }
-        if hist_needed and staged_hist["written_buckets"]:
+        if staged_hist["written_buckets"]:
             table.hist.commit(
                 None,
                 sorted(staged_hist["written_buckets"]),
@@ -1089,13 +491,16 @@ class Scd2Merge:
             affected,
             pending[-1],
             recipe=recipe,
-            metrics={"window": [pending[0], pending[-1]],
-                     "batches": {str(b): metrics_by_batch[b] for b in pending}},
+            metrics={
+                "window": window,
+                "buckets_read": affected,
+                "buckets_written": written,
+                "batches": {str(b): out[b] for b in pending},
+            },
             mode="overwrite",
             staged=staged_head,
             batch_ids=pending,
         )
-        out.update(metrics_by_batch)
         return out
 
 

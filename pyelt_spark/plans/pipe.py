@@ -41,7 +41,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyelt_spark.operators.hubs import HubMerge, LinkMerge
-from pyelt_spark.operators.prefetch import run_lane_one_ahead
 from pyelt_spark.operators.scd2 import Scd2Merge, Scd2Table
 from pyelt_spark.plans.domain import (
     DynamicLinkReference,
@@ -61,14 +60,15 @@ WINDOW_ROW_BUDGET_PER_CORE = 200_000
 
 def _window_sized(spark, total_rows: int) -> bool:
     """Volume gate for window-coalesced replay lanes: coalescing trades
-    per-batch fixed costs for one big per-key chain (sorts, a full-outer
-    join), which wins while the per-task state fits comfortably in memory
-    and loses once concurrent sort tasks spill (measured: 16M events on 8
-    pinned cores ran 202 s windowed vs 135 s per-batch, while 1M events on
-    32 cores ran 13 s windowed vs 20 s per-batch). The budget,
+    per-batch fixed costs for one big per-key pass over the whole window,
+    which wins while the per-task state fits comfortably in memory and
+    loses once concurrent sort tasks spill (measured on the earlier
+    window-function form of the merge: 16M events on 8 pinned cores ran
+    202 s windowed vs 135 s per-batch, while 1M events on 32 cores ran
+    13 s windowed vs 20 s per-batch). The budget,
     ``WINDOW_ROW_BUDGET_PER_CORE`` rows per core, scales with the
-    session's parallelism — the same stream that must fall back on a
-    2-core leg windows happily on a wide cluster."""
+    session's parallelism — the same stream that runs one window per
+    batch on a 2-core leg is one window on a wide cluster."""
     cores = max(spark.sparkContext.defaultParallelism, 1)
     return total_rows <= WINDOW_ROW_BUDGET_PER_CORE * cores
 
@@ -718,25 +718,7 @@ class Pipe:
             return lambda: apply_snapshot(t.table, t.merge, t.frame, batch_id)
         if aff == []:
             return lambda: {"skipped_empty_batch": batch_id}
-        if not isinstance(t.merge, Scd2Merge):
-            return lambda: t.merge.apply_batch(t.table, t.frame, batch_id, aff)
-
-        def fn(prepared: dict | None = None) -> dict:
-            return t.merge.apply_batch(
-                t.table, t.frame, batch_id, affected_buckets=aff, prepared=prepared
-            )
-
-        # one-ahead prefetch hooks for a replay lane: the sat's batch-side
-        # frame (dedup + hashdiff, the merge's one full shuffle) reads no
-        # table state, so a lane can materialize batch N+1's frame while
-        # batch N writes (operators/prefetch.py). Already-committed batches
-        # (torn-crash resume) get no hooks: apply_batch skips them before
-        # touching the frame, so a prefetch would be a wasted full shuffle
-        # (ADVICE r5)
-        if batch_id not in t.table.committed_batch_ids():
-            fn.prepare = lambda: t.merge.prepare_batch(t.table, t.frame)
-            fn.apply_prepared = fn
-        return fn
+        return lambda: t.merge.apply_batch(t.table, t.frame, batch_id, aff)
 
     def _run_jobs(self, jobs: list[tuple[str, Callable[[], dict]]]) -> dict[str, Any]:
         if not jobs:
@@ -982,13 +964,12 @@ class Pipe:
             run_recs[b] = self._runs_start(b, parts)
 
         def lane(t: _Target) -> None:
-            # window path first: the lane's whole pending sequence in one
-            # closed-form pass (the mapping projections are batch-independent,
-            # so the window merge slicing the full stream by batch id is
-            # identical to the per-batch frames); fall back to the one-ahead
-            # per-batch chain when the volume gate or the closed form (an
-            # out-of-order seq) refuses — snapshot sats claim completeness
-            # per batch and never window
+            # the volume gate is the lane's one decision: the whole pending
+            # sequence as one window (the mapping projections are
+            # batch-independent, so the window merge slicing the full stream
+            # by batch id is identical to the per-batch frames), or, over
+            # the row budget, one window per batch. Snapshot sats claim
+            # completeness per batch and never window
             probed = t.name in affected[pending[0]]
             ids_t = [b for b in pending if affected[b].get(t.name) != []]
             if not t.snapshot and (
@@ -1004,27 +985,17 @@ class Pipe:
                 res = t.merge.apply_batches(
                     t.table, t.frame, batch_col, ids_t, affected_buckets=aff_t
                 )
-                if res is not None:
-                    for b in pending:
-                        outs[b][t.name] = res.get(b, {"skipped_empty_batch": b})
-                    self._compact(t.table)  # lane-scoped: once per window
-                    return
-
-            def emit(b: int, out: dict) -> None:
-                outs[b][t.name] = out
+                for b in pending:
+                    outs[b][t.name] = res.get(b, {"skipped_empty_batch": b})
+                self._compact(t.table)  # lane-scoped: once per window
+                return
+            for b in pending:
+                frame = t.frame.filter(F.col(batch_col) == b)
+                outs[b][t.name] = self._job(t._replace(frame=frame), b, affected[b].get(t.name))()
                 # lane-scoped maintenance: a lane compacts only ITS table (a
                 # cross-lane compaction would violate the tables'
                 # single-writer commit protocol mid-replay)
                 self._compact(t.table)
-
-            run_lane_one_ahead(
-                [
-                    (b, self._job(t._replace(frame=t.frame.filter(F.col(batch_col) == b)), b,
-                                  affected[b].get(t.name)))
-                    for b in pending
-                ],
-                emit,
-            )
 
         self._run_jobs([(t.name, lambda t=t: lane(t)) for t in targets])
         for b in pending:

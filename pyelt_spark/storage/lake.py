@@ -136,9 +136,10 @@ class LakeTable:
         # in-process commit-log cache: loaded once, appended on commit.
         # Single-writer assumption (one driver owns a table), matching the
         # commit protocol; reopen the table to see another writer's commits.
-        # The lock serializes cache population against the commit append —
-        # the laned replays' prefetch thread reads recipe()/commits() while
-        # the lane thread commits, and an unsynchronized first read could
+        # The lock serializes cache population against the commit append:
+        # no engine thread reads a table another thread commits (each lane
+        # owns its tables), but a reader thread — a concurrent view query,
+        # a caller's monitor — may, and an unsynchronized first read could
         # capture a pre-commit disk listing and assign it AFTER the commit
         # appended, silently dropping that commit from the cache (the next
         # version number would then be reused and os.rename would overwrite
@@ -367,6 +368,8 @@ class LakeTable:
         ``bucket_overrides``: manifest-only dir-list replacements applied on
         top of the carry-forward (retention drops whole expired dirs by
         reference — zero data I/O; an empty list removes the bucket)."""
+        if staged is None and new_data is not None:
+            staged = self.stage(new_data, affected_buckets)
         last = self.last_commit()
         version = (last.version + 1) if last else 1
         if staged is not None:
@@ -378,20 +381,7 @@ class LakeTable:
             written_buckets: set[int] = staged["written_buckets"]
         else:
             rel_dir = os.path.join("data", f"v{version}")
-            out_dir = os.path.join(self.path, rel_dir)
             written_buckets = set()
-            if new_data is not None:
-                (
-                    new_data.withColumn(_PART_COL, F.col(BUCKET_COL))
-                    .repartition(max(len(affected_buckets), 1), F.col(BUCKET_COL))
-                    .write.partitionBy(_PART_COL)
-                    .mode("overwrite")
-                    .parquet(out_dir)
-                )
-                if os.path.isdir(out_dir):
-                    for name in os.listdir(out_dir):
-                        if name.startswith(f"{_PART_COL}="):
-                            written_buckets.add(int(name.split("=", 1)[1]))
 
         buckets = dict(last.buckets) if last else {}
         for b in affected_buckets:
@@ -412,11 +402,7 @@ class LakeTable:
         if staged is not None:
             schema_json = staged["schema_json"]
         else:
-            schema_json = (
-                json.loads(new_data.schema.json())
-                if new_data is not None
-                else (last.schema if last else None)
-            )
+            schema_json = last.schema if last else None
         if schema_json is None:
             raise ValueError("first commit must carry data to define a schema")
 

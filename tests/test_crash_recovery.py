@@ -74,6 +74,43 @@ def test_crash_between_hist_and_head_commit(spark, tmp_path):
     assert met == {"skipped_duplicate_batch": 2}
 
 
+def test_window_crash_between_hist_and_head_resumes_in_a_longer_window(spark, tmp_path):
+    """A window [2, 3] crashes after its history commit and before its head
+    commit, then resumes as the longer window [2, 3, 4]: the rows closed by
+    batches 2-3 are already in the history log and must not be appended
+    again, while batch 4's closed row is new."""
+    def ev(seq, text, b):
+        return (seq, "c1", 0, "user", text, None, "U", TS + dt.timedelta(seconds=seq), b)
+
+    stream = spark.createDataFrame(
+        [ev(1, "v1", 1), ev(2, "v2", 2), ev(3, "v3", 3), ev(4, "v4", 4)],
+        SCHEMA + ", batch_id long",
+    )
+    path = str(tmp_path / "sat")
+    t = Scd2Table(spark, path, num_buckets=4)
+    _merge().apply_batches(t, stream, "batch_id", [1])
+
+    def boom(*a, **k):
+        raise RuntimeError("injected crash before head commit")
+
+    t.head.commit = boom
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _merge().apply_batches(t, stream, "batch_id", [2, 3])
+    assert {2, 3} <= t.hist.committed_batch_ids()
+    assert not {2, 3} & t.head.committed_batch_ids()
+
+    t2 = Scd2Table(spark, path, num_buckets=4)
+    res = _merge().apply_batches(t2, stream, "batch_id", [2, 3, 4])
+    assert [res[b]["updated"] for b in (2, 3, 4)] == [1, 1, 1]
+
+    clean = Scd2Table(spark, str(tmp_path / "clean"), num_buckets=4)
+    _merge().apply_batches(clean, stream, "batch_id", [1, 2, 3, 4])
+    rows = sorted((r["text"], r["_active"]) for r in t2.read().collect())
+    assert rows == [("v1", False), ("v2", False), ("v3", False), ("v4", True)]
+    a, b = t2.read().drop("_bucket"), clean.read().drop("_bucket")
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 def test_vault_crash_with_partial_table_commits(spark, tmp_path):
     """The hub/sat/link merges run concurrently; a crash can leave SOME
     tables committed for a batch and others not. Resume must re-apply the

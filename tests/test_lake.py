@@ -104,9 +104,9 @@ def test_time_travel_read_version(spark, tmp_path):
 
 def test_commits_cache_population_race_with_commit(spark, tmp_path):
     """A reader thread populating the commits cache concurrently with a
-    writer thread committing must not lose the new commit (r5: the laned
-    replays' prefetch thread reads recipe()/commits() while the lane
-    thread commits — an unsynchronized population could capture a
+    writer thread committing must not lose the new commit (a concurrent
+    reader of a table a replay lane commits to — an unsynchronized
+    population could capture a
     pre-commit disk listing and assign it AFTER the append, dropping the
     commit from the cache and letting the next version overwrite a
     published manifest). Deterministically forces the worst interleaving

@@ -75,13 +75,15 @@ def test_laned_crash_lanes_at_different_batches(spark, tmp_path):
     ev.unpersist()
 
 
-def test_laned_sat_history_compaction_matches_serial(spark, tmp_path):
-    """A late event forces the sat lane onto the per-batch chain, where the
-    lane compacts after every step. The laned replay must compact the sat
-    history at the SAME threshold as the serial ``apply_batch`` loop (16
-    dirs/bucket, ``TranscriptVault.maintain``) and land identical sat
-    state: 20 batches over 2 buckets take each history bucket past 16
-    appended dirs."""
+def test_laned_sat_history_compaction_matches_serial(spark, tmp_path, monkeypatch):
+    """Over the volume gate a lane runs one window per batch and compacts
+    after each. That laned replay must compact the sat history at the
+    SAME threshold as the serial ``apply_batch`` loop (16 dirs/bucket,
+    ``TranscriptVault.maintain``) and land identical sat state: 20 batches
+    over 2 buckets take each history bucket past 16 appended dirs. Under
+    the real budget the same late stream is one window."""
+    import pyelt_spark.plans.pipe as pipe_mod
+
     ev = transcript_change_events(spark, 400, batch_size=20, seed=11)
     # late event: a key's first event re-delivered in the batch after the
     # key's last one, so its seq is older than the key's head row
@@ -99,9 +101,15 @@ def test_laned_sat_history_compaction_matches_serial(spark, tmp_path):
     )
     ev = ev.unionByName(late).persist()
     try:
+        windowed = TranscriptVault(spark, str(tmp_path / "windowed"), num_buckets=2)
+        out = MicrobatchRunner(windowed).replay(ev)
+        assert all(o["sat"]["window"] == [0, 19] for o in out), "late stream did not window"
+        assert sum(o["sat"]["stale"] for o in out) == 1
+
+        monkeypatch.setattr(pipe_mod, "WINDOW_ROW_BUDGET_PER_CORE", 0)
         laned = TranscriptVault(spark, str(tmp_path / "laned"), num_buckets=2)
         out = MicrobatchRunner(laned).replay(ev)
-        assert all("window" not in o["sat"] for o in out), "sat lane did not fall back"
+        assert all(o["sat"]["window"] == [o["batch_id"]] * 2 for o in out)
 
         serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=2)
         for b in range(20):
@@ -116,9 +124,10 @@ def test_laned_sat_history_compaction_matches_serial(spark, tmp_path):
             )
 
         assert n_compactions(laned) == n_compactions(serial) >= 1
-        a = laned.sat.read().drop("_bucket")
         b = serial.sat.read().drop("_bucket")
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        for vault in (laned, windowed):
+            a = vault.sat.read().drop("_bucket")
+            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     finally:
         ev.unpersist()
 

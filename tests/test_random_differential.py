@@ -242,8 +242,8 @@ def test_engine_matches_simulator_under_schema_evolution(spark, tmp_path):
 
 
 def test_laned_replay_matches_serial_on_adversarial_stream(spark, tmp_path):
-    """The laned+prefetching replay orchestration (per-table batch chains,
-    one-ahead sat prefetch, probe-proven empty-batch skips) must land the
+    """The laned replay orchestration (per-table lanes, each applying its
+    batches as one window, probe-proven empty-batch skips) must land the
     same vault state as the serial per-batch loop on an ADVERSARIAL stream
     — duplicates, cross-batch stale seqs, deletes, reinserts — not just
     the fixed generator's golden paths (r5: the orchestration rewrite)."""

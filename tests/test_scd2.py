@@ -234,7 +234,7 @@ def test_cow_head_holds_one_dir_per_bucket(spark, tmp_path):
             m.apply_batch(t, ev.filter(F.col("batch_id") == b), b)
             assert_one_dir_per_bucket()
         res = m.apply_batches(t, ev, "batch_id", [2, 3])
-        assert res is not None and "window" in res[3]
+        assert res[3]["window"] == [2, 3]
         assert_one_dir_per_bucket()
 
         version = t.head.last_commit().version

@@ -229,19 +229,6 @@ def test_model_validation(spark):
     assert any("later_col" in w for w in warns)
 
 
-def test_arrow_hash_twin_bit_identical(spark):
-    from pyelt_spark.functions.hashing import hash_key, hash_key_arrow
-
-    df = spark.createDataFrame(
-        [("c1", 3), ("c2", None), (None, 7)], "conv_id string, turn_idx int"
-    )
-    out = df.select(
-        hash_key("conv_id", "turn_idx").alias("jvm"),
-        hash_key_arrow("conv_id", "turn_idx").alias("arrow"),
-    ).collect()
-    assert all(r["jvm"] == r["arrow"] for r in out)
-
-
 def test_datamart_star_schema(spark, tmp_path):
     from pyelt_spark.plans.datamart import dim_conversation, fact_turn_versions
     from pyelt_spark.plans.pipeline import TranscriptVault

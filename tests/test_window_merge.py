@@ -1,9 +1,14 @@
 """Window-coalesced merges (Scd2Merge.apply_batches / HubMerge.apply_batches):
-the closed-form multi-batch application must be BYTE-IDENTICAL to applying
-the same batches sequentially with apply_batch — state (head, hist, hub,
-link) and per-batch metrics alike — must skip committed ids on resume, and
-must refuse (return None → caller falls back) when the out-of-order
-precondition fails."""
+a multi-batch application must be BYTE-IDENTICAL to applying the same
+batches one at a time — state (head, hist, hub, link) and per-batch
+metrics alike — and must skip committed ids on resume. ``apply_batch`` is
+itself a window of one, so the sat cases also check the window against
+independent references: the pure-Python simulators of
+tests/test_random_differential.py, on adversarial (late, out-of-order,
+tombstone-churning) streams."""
+
+import datetime as dt
+import random
 
 import pytest
 
@@ -48,7 +53,6 @@ def test_window_sat_matches_sequential_with_seeded_head(spark, tmp_path):
             for b in post
         }
         win_metrics = m.apply_batches(t_win, ev, "batch_id", post)
-        assert win_metrics is not None, "window path unexpectedly fell back"
         _assert_same(t_seq.head.read(), t_win.head.read(), "head")
         _assert_same(t_seq.hist.read(), t_win.hist.read(), "hist")
         for b in post:
@@ -80,21 +84,120 @@ def test_window_sat_resume_skips_committed_prefix(spark, tmp_path):
         ev.unpersist()
 
 
-def test_window_sat_falls_back_on_out_of_order_seqs(spark, tmp_path):
-    """A later batch carrying an OLDER seq for a key (the sequential stale
-    guard's territory) must refuse the closed form."""
-    rows = [
-        (5, "c1", 0, "user", "x", None, "U", None, 0),
-        (3, "c1", 0, "user", "y", None, "U", None, 1),
-    ]
-    adv = spark.createDataFrame(
-        rows,
-        "seq long, conv_id string, turn_idx int, role string, text string, "
-        "tool string, op string, ts timestamp, batch_id int",
+_SIM_SCHEMA = (
+    "seq long, conv_id string, turn_idx int, role string, text string, "
+    "tool string, op string, ts timestamp, batch_id long"
+)
+_SIM_COLS = ["seq", "conv_id", "turn_idx", "role", "text", "tool", "op", "ts", "batch_id"]
+
+
+def _sim_rows(t, meta=False):
+    """Engine state in the simulators' row shape (hist ∪ head)."""
+    return sorted(
+        (
+            r["conv_id"], r["turn_idx"], r["text"],
+            *((r["meta"],) if meta else ()),
+            r["_runid"], r["_revision"], bool(r["_active"]), r["_seq"],
+            r["_deleted_runid"] if r["_deleted_runid"] is not None else -1,
+        )
+        for r in t.read().collect()
     )
+
+
+def test_window_sat_applies_out_of_order_seqs(spark, tmp_path):
+    """A later batch carrying an OLDER seq for a key (the stale guard's
+    territory) is applied in the window itself: the stale event is
+    ignored, exactly as the simulator's batch-by-batch fold ignores it."""
+    from tests.test_random_differential import _simulate
+
+    ts = dt.datetime(2024, 1, 1)
+    events = [
+        {"seq": 5, "conv_id": "c1", "turn_idx": 0, "role": "user", "text": "x",
+         "tool": None, "op": "U", "ts": ts, "batch_id": 0},
+        {"seq": 3, "conv_id": "c1", "turn_idx": 0, "role": "user", "text": "y",
+         "tool": None, "op": "U", "ts": ts, "batch_id": 1},
+    ]
+    adv = spark.createDataFrame([tuple(e[c] for c in _SIM_COLS) for e in events], _SIM_SCHEMA)
     t = Scd2Table(spark, str(tmp_path / "t"), num_buckets=2)
-    assert _merge().apply_batches(t, adv, "batch_id", [0, 1]) is None
-    assert t.committed_batch_ids() == set()  # nothing half-applied
+    res = _merge().apply_batches(t, adv, "batch_id", [0, 1])
+    assert res[0]["inserted"] == 1 and res[1]["stale"] == 1
+    assert t.committed_batch_ids() == {0, 1}
+    assert _sim_rows(t) == _simulate(events)
+
+
+def test_window_sat_matches_simulator_on_adversarial_stream(spark, tmp_path):
+    """The whole adversarial stream (duplicates, cross-batch stale seqs,
+    deletes, reinserts) as ONE window, from an empty head."""
+    from tests.test_random_differential import _gen_stream, _simulate
+
+    events = _gen_stream(random.Random(20240817), n_events=240, n_keys=25, n_batches=4)
+    df = spark.createDataFrame([tuple(e[c] for c in _SIM_COLS) for e in events], _SIM_SCHEMA)
+    t = Scd2Table(spark, str(tmp_path / "sat"), num_buckets=8)
+    ids = sorted({e["batch_id"] for e in events})
+    res = _merge().apply_batches(t, df, "batch_id", ids)
+    assert sum(res[b]["stale"] for b in ids) > 0  # the stream really is late
+    assert _sim_rows(t) == _simulate(events)
+
+
+def test_window_sat_matches_simulator_under_schema_evolution(spark, tmp_path):
+    """Two windows under two recipes: batches 0-1 without ``meta``, then
+    batches 2-3 with it as one window whose first comparisons run against
+    head rows stored under the old recipe."""
+    from tests.test_random_differential import _gen_stream, _simulate_evolved
+
+    rng = random.Random(99)
+    evolve_at = 2
+    events = _gen_stream(rng, n_events=200, n_keys=20, n_batches=4)
+    for e in events:
+        e["meta"] = (
+            f"m{rng.randrange(3)}" if e["batch_id"] >= evolve_at and rng.random() < 0.4
+            else None
+        )
+    t = Scd2Table(spark, str(tmp_path / "sat"), num_buckets=8)
+    m3 = _merge()
+    m4 = Scd2Merge(
+        business_keys=["conv_id", "turn_idx"],
+        payload_cols=["role", "text", "tool", "meta"],
+        order_by=["seq"],
+    )
+    old = [e for e in events if e["batch_id"] < evolve_at]
+    new = [e for e in events if e["batch_id"] >= evolve_at]
+    df3 = spark.createDataFrame([tuple(e[c] for c in _SIM_COLS) for e in old], _SIM_SCHEMA)
+    df4 = spark.createDataFrame(
+        [tuple(e[c] for c in _SIM_COLS + ["meta"]) for e in new], _SIM_SCHEMA + ", meta string"
+    )
+    m3.apply_batches(t, df3, "batch_id", sorted({e["batch_id"] for e in old}))
+    m4.apply_batches(t, df4, "batch_id", sorted({e["batch_id"] for e in new}))
+    assert _sim_rows(t, meta=True) == _simulate_evolved(events, evolve_at)
+
+
+@pytest.mark.parametrize("windows", [[[1, 2, 3, 4]], [[1, 2], [3, 4]]])
+def test_window_sat_delete_of_tombstone_keeps_seq(spark, tmp_path, windows):
+    """alive@5, D@9, D@12, U@10: the second delete hits a tombstone — a
+    noop that must NOT advance ``_seq`` past the first delete's 9 — so the
+    upsert at seq 10 is not stale and reinserts the key. In one window and
+    split across two."""
+    from tests.test_random_differential import _simulate
+
+    ts = dt.datetime(2024, 1, 1)
+    spec = [(5, "U", "alive", 1), (9, "D", None, 2), (12, "D", None, 3), (10, "U", "back", 4)]
+    events = [
+        {"seq": q, "conv_id": "c1", "turn_idx": 0, "role": "user", "text": txt,
+         "tool": None, "op": op, "ts": ts + dt.timedelta(seconds=q), "batch_id": b}
+        for q, op, txt, b in spec
+    ]
+    df = spark.createDataFrame([tuple(e[c] for c in _SIM_COLS) for e in events], _SIM_SCHEMA)
+    t = Scd2Table(spark, str(tmp_path / "sat"), num_buckets=2)
+    res = {}
+    for ids in windows:
+        res.update(_merge().apply_batches(t, df, "batch_id", ids))
+    assert res[3]["unchanged"] == 1 and res[3]["deleted"] == 0
+    assert res[4]["inserted"] == 1 and res[4]["stale"] == 0
+    head = t.head.read().collect()
+    assert [(r["text"], r["_active"], r["_seq"], r["_revision"]) for r in head] == [
+        ("back", True, 10, 1)
+    ]
+    assert _sim_rows(t) == _simulate(events)
 
 
 def test_window_hub_and_link_match_sequential(spark, tmp_path):
@@ -182,7 +285,6 @@ def test_window_matches_sequential_across_schema_evolution(spark, tmp_path):
         for b in (1, 2, 3)
     }
     wm = m4.apply_batches(t_win, ev, "batch_id", [1, 2, 3])
-    assert wm is not None, "window path unexpectedly fell back"
     _assert_same(t_seq.head.read(), t_win.head.read(), "head")
     _assert_same(t_seq.hist.read(), t_win.hist.read(), "hist")
     for b in (1, 2, 3):
