@@ -6,18 +6,15 @@ change-event tail: one surviving row per business key, picked by the
 highest sequence number.
 
 Scale design — this is the operator that meets hot-key skew head on
-(SURVEY §4.1). Two implementations:
-
-* ``latest_per_key`` (default): ``groupBy(keys).agg(max_by(payload, ord))``.
-  ``max_by`` is an ordinary aggregate, so Spark applies a *partial
-  (map-side) aggregation* before the shuffle: a conversation with 10^7
-  events in one scan partition is collapsed to one row per key **before**
-  any byte crosses the network. No window, no skewed partition, no salt
-  needed — the salt+two-phase trick is what this construction subsumes
-  (a partial agg IS phase one on a free "salt" = input partition id).
-* ``latest_per_key_window``: the textbook row_number window, kept for
-  cross-checking; its ``partitionBy(keys)`` places every event of a hot
-  key in a single task, so it is NOT the scale path.
+(SURVEY §4.1): ``groupBy(keys).agg(max_by(payload, ord))``. ``max_by`` is
+an ordinary aggregate, so Spark applies a *partial (map-side)
+aggregation* before the shuffle: a conversation with 10^7 events in one
+scan partition is collapsed to one row per key **before** any byte
+crosses the network. No window, no skewed partition, no salt needed —
+the salt+two-phase trick is what this construction subsumes (a partial
+agg IS phase one on a free "salt" = input partition id). The textbook
+``row_number`` window, whose ``partitionBy(keys)`` places every event of
+a hot key in one task, lives in tests/test_dedup.py as a cross-check.
 
 Determinism: ties on the ordering columns (duplicate ``(key, seq)`` events
 are a required test case, FIXTURES §1) are broken by an xxhash64 digest of
@@ -30,9 +27,8 @@ astronomically unlikely — is the accepted trade for hashing speed.)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
 
 
 def _tiebreak(df: DataFrame, order_by: list[str], tiebreak_cols: list[str] | None) -> Column:
@@ -64,23 +60,3 @@ def latest_per_key(
     winner = F.max_by(F.struct(*[F.col(c) for c in df.columns]), F.struct(*ord_cols))
     out = df.groupBy(*[F.col(k) for k in keys]).agg(winner.alias("_w"))
     return out.select(*[F.col(f"_w.{c}").alias(c) for c in df.columns])
-
-
-def latest_per_key_window(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[str],
-    deterministic: bool = True,
-    tiebreak_cols: list[str] | None = None,
-) -> DataFrame:
-    """Window-based variant (row_number == 1). Correct but skew-prone —
-    kept as a semantic cross-check for tests, not the production path."""
-    ord_exprs = [F.col(c).desc() for c in order_by]
-    if deterministic:
-        ord_exprs.append(_tiebreak(df, order_by, tiebreak_cols).desc())
-    w = Window.partitionBy(*keys).orderBy(*ord_exprs)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )

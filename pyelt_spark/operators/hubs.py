@@ -6,8 +6,8 @@ FROM hub WHERE bk = ...)`` (pyelt/process/etl.py:433-439); a link is the
 same pattern over a composite of hub keys with null-safe FK comparison
 (etl.py:711-716, :796-809).
 
-Spark shape: ``distinct`` on the (already deduped) batch → anti-join
-against the pruned state read → rewrite only the new keys' buckets. Because
+Spark shape: one first-batch-wins aggregate over a window of batches →
+anti-join against the pruned state read → append only the new keys. Because
 surrogate keys are SHA-256 hashes of the business key (not serials), hub,
 sat and link merges all run independently from the same deduped batch — no
 sequential ``UPDATE sor SET fk_hub = hub._id`` writeback round-trip
@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 
 from pyelt_spark.functions.hashing import business_key, hash_key
 from pyelt_spark.storage.lake import BUCKET_COL, LakeTable, bucket_expr
+
+_ONE = "__batch"  # the literal batch column of a window of one
 
 
 @dataclass
@@ -55,30 +57,73 @@ class HubMerge:
         batch_id: int,
         affected_buckets: list[int] | None = None,
     ) -> dict[str, Any]:
-        """``affected_buckets``: optional precomputed superset of the batch's
-        buckets (see Scd2Merge.apply_batch) — skips the per-batch bucket
-        discovery job; pruned reads just get wider."""
-        if batch_id in table.committed_batch_ids():
-            return {"skipped_duplicate_batch": batch_id}
-        # group on the hash key itself: the aggregate's output partitioning
-        # feeds the anti-join below with no second exchange (business-key
-        # columns ride along as min() over equal values)
+        """Apply one microbatch: a window of one (see ``apply_batches``).
+        Idempotent: an already-committed batch_id is skipped."""
+        one = batch.withColumn(_ONE, F.lit(batch_id).cast("long"))
+        return self.apply_batches(table, one, _ONE, [batch_id], affected_buckets)[batch_id]
+
+    def apply_batches(
+        self,
+        table: LakeTable,
+        batch: DataFrame,
+        batch_col: str = "batch_id",
+        batch_ids: list[int] | None = None,
+        affected_buckets: list[int] | None = None,
+    ) -> dict[int, dict[str, Any]]:
+        """Register every pending batch's new keys in ONE pass, exactly as
+        applying them one by one in batch order; returns per-batch metrics
+        keyed by batch id. Committed ids are skipped (exactly-once); the
+        pending ones publish as ONE append commit (``Commit.batch_ids``).
+
+        First batch wins: a key first seen in batch b gets ``_runid`` = b
+        and, per column (``_insert_ts``, business keys, carry columns), the
+        least non-null value among b's rows of the key — one ``groupBy``
+        taking ``min(struct(batch, isnull(v), v)).v``, partially aggregated
+        below its one exchange, whose key partitioning feeds the anti-join
+        against the pruned state read. The per-batch ``new_keys`` are read
+        from the staged files' ``_runid`` column (no count job).
+        ``affected_buckets``: as in ``Scd2Merge.apply_batches``."""
+        done = table.committed_batch_ids()
+        all_ids = [int(b) for b in (batch_ids or [])]
+        out: dict[int, dict[str, Any]] = {
+            b: {"skipped_duplicate_batch": b} for b in all_ids if b in done
+        }
+        pending = sorted(b for b in all_ids if b not in done)
+        if not pending:
+            return out
+
+        ev = (
+            batch.filter(F.col(batch_col).isin(pending))
+            .filter(
+                F.coalesce(*[F.col(c).cast("string") for c in self.business_keys]).isNotNull()
+            )
+            .withColumns({
+                self.key_col: hash_key(*self.business_keys),
+                "_first_ts": F.col(self.ts_col).cast("timestamp"),
+            })
+        )
         # `_hub_type` input column: a per-row discriminator injected by the
         # caller (subtype entities sharing one hub — HubEntityMetaClass
         # subtype branch, dv_metaclasses.py:116 + etl.py:414-417 where the
         # mapping's target type overrides the static hub type)
-        has_row_type = "_hub_type" in batch.columns
+        has_row_type = "_hub_type" in ev.columns
+        folded = [
+            "_first_ts",
+            *self.business_keys,
+            *self.carry_cols,
+            *(["_hub_type"] if has_row_type else []),
+        ]
+        bc = F.col(batch_col).cast("long")
         keys = (
-            batch.filter(
-                F.coalesce(*[F.col(c).cast("string") for c in self.business_keys]).isNotNull()
-            )
-            .withColumn(self.key_col, hash_key(*self.business_keys))
-            .groupBy(self.key_col)
+            ev.groupBy(self.key_col)
             .agg(
-                F.min(F.col(self.ts_col).cast("timestamp")).alias("_first_ts"),
-                *[F.min(c).alias(c) for c in self.business_keys],
-                *[F.min(c).alias(c) for c in self.carry_cols],
-                *([F.min("_hub_type").alias("_hub_type")] if has_row_type else []),
+                F.min(bc).alias("_runid"),
+                *[
+                    F.min(F.struct(bc.alias("b"), F.isnull(c).alias("n"), F.col(c).alias("v")))
+                    .getField("v")
+                    .alias(c)
+                    for c in folded
+                ],
             )
             .select(
                 F.col(self.key_col),
@@ -99,19 +144,17 @@ class HubMerge:
                 *[F.col(c) for c in self.business_keys if c != "type"],
                 *[F.col(c) for c in self.carry_cols],
                 *self._extra_cols(),
-                F.lit(batch_id).cast("long").alias("_runid"),
+                F.col("_runid"),
                 F.col("_first_ts").alias("_insert_ts"),
                 F.lit(self.source_system).alias("_source_system"),
             )
             .withColumn(BUCKET_COL, bucket_expr(self.key_col, table.num_buckets))
         )
         if affected_buckets is not None:
-            affected = [int(b) for b in affected_buckets]
+            affected = sorted(int(k) for k in affected_buckets)
         else:
-            # no precomputed superset: one discovery job (replay loops
-            # precompute this for every batch up front)
-            keys = keys.persist()
-            affected = [r[0] for r in keys.select(BUCKET_COL).distinct().collect()]
+            bucket = bucket_expr(self.key_col, table.num_buckets)
+            affected = sorted(int(r[0]) for r in ev.select(bucket).distinct().collect())
         first_load = table.last_commit() is None or not table.last_commit().buckets
         if first_load:
             fresh = keys
@@ -119,161 +162,29 @@ class HubMerge:
             # anti-join against the pruned state read; APPEND only the new
             # keys — existing bucket files are never rewritten (insert-only)
             state = table.read(buckets=affected)
-            fresh = keys.join(
-                state.select(F.col(self.key_col)), self.key_col, "left_anti"
-            )
-        # ONE Spark job per hub merge: stage the new keys' files, then
-        # derive new_keys/buckets from the staged footers (metadata only)
-        # and publish the manifest — no pre-write count collect blocks the
-        # write, and the batch's only driver-blocking points are the stage
-        # wait and the manifest rename
-        staged = table.stage(fresh, affected)
-        metrics = {
-            "batch_id": batch_id,
-            "new_keys": sum(staged["rows_per_bucket"].values()),
-            "buckets_read": sorted(affected),
-            "buckets_written": sorted(staged["written_buckets"]),
-        }
-        table.commit(
-            None,
-            affected_buckets=affected,
-            batch_id=batch_id,
-            metrics=metrics,
-            mode="append",
-            staged=staged,
-        )
-        if affected_buckets is None:
-            keys.unpersist()
-        return metrics
-
-    def apply_batches(
-        self,
-        table: LakeTable,
-        batch: DataFrame,
-        batch_col: str = "batch_id",
-        batch_ids: list[int] | None = None,
-        affected_buckets: list[int] | None = None,
-    ) -> dict[int, dict[str, Any]] | None:
-        """Window-coalesced insert-only merge: register every pending
-        batch's new keys in ONE pass, identical to applying the batches
-        sequentially. A key first seen in batch b gets b's row exactly as
-        the per-batch path would build it (first-batch-wins: ``_runid`` =
-        first feeding batch, ``_insert_ts``/business keys/carry columns
-        aggregated WITHIN that batch) — expressed as a per-(key, batch)
-        aggregation followed by a min-by-batch fold, both on one
-        key-partitioned exchange. One anti-join against state, one append
-        write, one manifest carrying the whole id window."""
-        done = table.committed_batch_ids()
-        all_ids = [int(b) for b in (batch_ids or [])]
-        out: dict[int, dict[str, Any]] = {
-            b: {"skipped_duplicate_batch": b} for b in all_ids if b in done
-        }
-        pending = sorted(b for b in all_ids if b not in done)
-        if not pending:
-            return out
-        if len(pending) == 1:
-            out[pending[0]] = self.apply_batch(
-                table,
-                batch.filter(F.col(batch_col) == pending[0]),
-                pending[0],
-                affected_buckets=affected_buckets,
-            )
-            return out
-
-        ev = batch.filter(F.col(batch_col).isin(pending))
-        has_row_type = "_hub_type" in ev.columns
-        keyed = (
-            ev.filter(
-                F.coalesce(
-                    *[F.col(c).cast("string") for c in self.business_keys]
-                ).isNotNull()
-            )
-            .withColumn(self.key_col, hash_key(*self.business_keys))
-            .withColumn("_b", F.col(batch_col).cast("long"))
-            .repartition(F.col(self.key_col))
-        )
-        g1 = keyed.groupBy(self.key_col, "_b").agg(
-            F.min(F.col(self.ts_col).cast("timestamp")).alias("_first_ts"),
-            *[F.min(c).alias(c) for c in self.business_keys],
-            *[F.min(c).alias(c) for c in self.carry_cols],
-            *([F.min("_hub_type").alias("_hub_type")] if has_row_type else []),
-        )
-        folded = [
-            "_first_ts",
-            *self.business_keys,
-            *self.carry_cols,
-            *(["_hub_type"] if has_row_type else []),
-        ]
-        g2 = g1.groupBy(self.key_col).agg(
-            F.min(F.struct(F.col("_b"), *[F.col(c) for c in folded])).alias("_w")
-        )
-        keys = g2.select(
-            F.col(self.key_col),
-            *[F.col(f"_w.{c}").alias(c) for c in folded],
-            F.col("_w._b").alias("_b"),
-        )
-        keys = (
-            keys.select(
-                F.col(self.key_col),
-                (
-                    F.col("type")
-                    if "type" in self.business_keys
-                    else (
-                        F.coalesce(F.col("_hub_type"), F.lit(self.hub_type))
-                        if has_row_type
-                        else F.lit(self.hub_type)
-                    )
-                ).alias("type"),
-                business_key(*self.business_keys).alias("bk"),
-                *[F.col(c) for c in self.business_keys if c != "type"],
-                *[F.col(c) for c in self.carry_cols],
-                *self._extra_cols(),
-                F.col("_b").alias("_runid"),
-                F.col("_first_ts").alias("_insert_ts"),
-                F.lit(self.source_system).alias("_source_system"),
-            )
-            .withColumn(BUCKET_COL, bucket_expr(self.key_col, table.num_buckets))
-        )
-        if affected_buckets is not None:
-            affected = [int(b) for b in affected_buckets]
-        else:
-            keys = keys.persist()
-            affected = [r[0] for r in keys.select(BUCKET_COL).distinct().collect()]
-        first_load = table.last_commit() is None or not table.last_commit().buckets
-        if first_load:
-            fresh = keys
-        else:
-            state = table.read(buckets=affected)
-            fresh = keys.join(
-                state.select(F.col(self.key_col)), self.key_col, "left_anti"
-            )
-        fresh = fresh.persist()
-        staged = table.stage(fresh, affected)
-        per_batch = {
-            int(r["_runid"]): r["n"]
-            for r in fresh.groupBy("_runid").agg(F.count("*").alias("n")).collect()
-        }
-        fresh.unpersist()
-        if affected_buckets is None:
-            keys.unpersist()
+            fresh = keys.join(state.select(F.col(self.key_col)), self.key_col, "left_anti")
+        staged = table.stage(fresh, affected, count_by="_runid")
+        per_batch = staged["rows_by"]
+        window = [pending[0], pending[-1]]
+        written = sorted(staged["written_buckets"])
         for b in pending:
             out[b] = {
                 "batch_id": b,
                 "new_keys": per_batch.get(b, 0),
-                "buckets_read": sorted(affected),
-                "buckets_written": sorted(staged["written_buckets"]),
-                "window": [pending[0], pending[-1]],
+                "buckets_read": affected,
+                "buckets_written": written,
+                "window": window,
             }
         table.commit(
             None,
             affected_buckets=affected,
             batch_id=pending[-1],
             metrics={
-                "window": [pending[0], pending[-1]],
+                "window": window,
                 "new_keys": sum(per_batch.values()),
                 "new_keys_per_batch": {str(b): per_batch.get(b, 0) for b in pending},
-                "buckets_read": sorted(affected),
-                "buckets_written": sorted(staged["written_buckets"]),
+                "buckets_read": affected,
+                "buckets_written": written,
             },
             mode="append",
             staged=staged,

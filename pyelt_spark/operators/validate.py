@@ -111,7 +111,7 @@ def quarantine_exceptions(
     staged = table.stage(rows, list(range(table.num_buckets)))
     metrics = {
         "batch_id": batch_id,
-        "new_exceptions": sum(staged["rows_per_bucket"].values()),
+        "new_exceptions": staged["rows"],
     }
     table.commit(
         None,

@@ -58,19 +58,26 @@ ALL_PARTS = ["sor", "valuesets", "hubs", "views", "links", "viewlinks"]
 WINDOW_ROW_BUDGET_PER_CORE = 200_000
 
 
-def _window_sized(spark, total_rows: int) -> bool:
-    """Volume gate for window-coalesced replay lanes: coalescing trades
-    per-batch fixed costs for one big per-key pass over the whole window,
-    which wins while the per-task state fits comfortably in memory and
-    loses once concurrent sort tasks spill (measured on the earlier
-    window-function form of the merge: 16M events on 8 pinned cores ran
-    202 s windowed vs 135 s per-batch, while 1M events on 32 cores ran
-    13 s windowed vs 20 s per-batch). The budget,
-    ``WINDOW_ROW_BUDGET_PER_CORE`` rows per core, scales with the
-    session's parallelism — the same stream that runs one window per
-    batch on a 2-core leg is one window on a wide cluster."""
-    cores = max(spark.sparkContext.defaultParallelism, 1)
-    return total_rows <= WINDOW_ROW_BUDGET_PER_CORE * cores
+def _windows(spark, ids: list[int], rows: dict[int, int]) -> list[list[int]]:
+    """The volume gate: ``ids`` (batch order) cut into consecutive windows
+    whose input rows (``rows[b]``, the probe's count) fit
+    ``WINDOW_ROW_BUDGET_PER_CORE`` rows per core of session parallelism; a
+    batch over the budget is a window of one. A window trades per-batch
+    fixed costs for one per-key pass, which wins until its sort tasks
+    spill (measured on the earlier window-function merge: 16M events on 8
+    pinned cores ran 202 s as one window vs 135 s per batch, 1M events on
+    32 cores 13 s vs 20 s)."""
+    budget = WINDOW_ROW_BUDGET_PER_CORE * max(spark.sparkContext.defaultParallelism, 1)
+    out: list[list[int]] = []
+    total = 0
+    for b in ids:
+        n = rows.get(b, 0)
+        if not out or total + n > budget:
+            out.append([])
+            total = 0
+        out[-1].append(b)
+        total += n
+    return out
 
 
 def _where(df: DataFrame, conds: list[str]) -> DataFrame:
@@ -964,38 +971,32 @@ class Pipe:
             run_recs[b] = self._runs_start(b, parts)
 
         def lane(t: _Target) -> None:
-            # the volume gate is the lane's one decision: the whole pending
-            # sequence as one window (the mapping projections are
-            # batch-independent, so the window merge slicing the full stream
-            # by batch id is identical to the per-batch frames), or, over
-            # the row budget, one window per batch. Snapshot sats claim
-            # completeness per batch and never window
+            # lane-scoped maintenance after every merge: a lane compacts
+            # only ITS table (a cross-lane compaction would violate the
+            # tables' single-writer commit protocol mid-replay). Snapshot
+            # sats claim completeness per batch and never window
+            if t.snapshot:
+                for b in pending:
+                    frame = t.frame.filter(F.col(batch_col) == b)
+                    outs[b][t.name] = self._job(t._replace(frame=frame), b, None)()
+                    self._compact(t.table)
+                return
+            # the mapping projections are batch-independent, so a window
+            # merge slicing the full stream by batch id is identical to the
+            # per-batch frames. Unprobed tables have no bucket evidence:
+            # one window, and None lets the merge discover its own buckets
+            # ([] would wrongly publish an empty manifest)
             probed = t.name in affected[pending[0]]
             ids_t = [b for b in pending if affected[b].get(t.name) != []]
-            if not t.snapshot and (
-                not probed
-                or _window_sized(self.spark, sum(rows_per.get((b, t.name), 0) for b in ids_t))
-            ):
-                # unprobed tables have no bucket evidence — None lets the
-                # window merge discover its own buckets; [] would wrongly
-                # publish an empty manifest
-                aff_t = (
-                    sorted({k for b in pending for k in affected[b][t.name]}) if probed else None
-                )
-                res = t.merge.apply_batches(
-                    t.table, t.frame, batch_col, ids_t, affected_buckets=aff_t
-                )
-                for b in pending:
-                    outs[b][t.name] = res.get(b, {"skipped_empty_batch": b})
-                self._compact(t.table)  # lane-scoped: once per window
-                return
-            for b in pending:
-                frame = t.frame.filter(F.col(batch_col) == b)
-                outs[b][t.name] = self._job(t._replace(frame=frame), b, affected[b].get(t.name))()
-                # lane-scoped maintenance: a lane compacts only ITS table (a
-                # cross-lane compaction would violate the tables'
-                # single-writer commit protocol mid-replay)
+            rows_t = {b: rows_per.get((b, t.name), 0) for b in ids_t}
+            for w in _windows(self.spark, ids_t, rows_t) if probed else [ids_t]:
+                aff_t = sorted({k for b in w for k in affected[b][t.name]}) if probed else None
+                res = t.merge.apply_batches(t.table, t.frame, batch_col, w, affected_buckets=aff_t)
+                for b in w:
+                    outs[b][t.name] = res[b]
                 self._compact(t.table)
+            for b in pending:
+                outs[b].setdefault(t.name, {"skipped_empty_batch": b})
 
         self._run_jobs([(t.name, lambda t=t: lane(t)) for t in targets])
         for b in pending:

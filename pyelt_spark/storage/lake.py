@@ -42,6 +42,7 @@ import os
 import shutil
 import threading
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 from typing import Any
 
@@ -55,18 +56,32 @@ BUCKET_COL = "_bucket"
 _PART_COL = "_bucket_p"  # duplicated partition dir column (partitionBy drops it)
 
 
-def _footer_row_count(d: str) -> int:
-    """Row count of a staged bucket dir from parquet footers — metadata
-    only, no data read. This is how post-write merge metrics are derived
+def _scan_staged(d: str, count_by: str | None = None) -> dict:
+    """The ``_bucket_p=`` dirs of a staged write under ``d``: the written
+    buckets and the row count from the parquet footers — metadata only,
+    no data read. This is how post-write merge metrics are derived
     without a pre-write driver aggregation (the Iceberg analog is the
-    write job's per-file stats recorded in the snapshot summary)."""
+    write job's per-file stats recorded in the snapshot summary).
+    ``count_by``: also the row count per value of that column
+    (``rows_by``, empty without it), reading that one column of the
+    staged files."""
     import pyarrow.parquet as pq
 
-    n = 0
-    for f in os.listdir(d):
-        if f.endswith(".parquet"):
-            n += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
-    return n
+    written: set[int] = set()
+    rows = 0
+    rows_by: Counter = Counter()
+    for name in os.listdir(d) if os.path.isdir(d) else []:
+        if not name.startswith(f"{_PART_COL}="):
+            continue
+        written.add(int(name.split("=", 1)[1]))
+        for f in os.listdir(os.path.join(d, name)):
+            if not f.endswith(".parquet"):
+                continue
+            pf = pq.ParquetFile(os.path.join(d, name, f))
+            rows += pf.metadata.num_rows
+            if count_by is not None:
+                rows_by.update(pf.read(columns=[count_by]).column(0).to_pylist())
+    return {"written_buckets": written, "rows": rows, "rows_by": dict(rows_by)}
 
 
 def bucket_expr(key_col, num_buckets: int):
@@ -223,7 +238,9 @@ class LakeTable:
 
     # ---------------------------------------------------------------- writing
 
-    def stage(self, new_data: DataFrame, affected_buckets: list[int]) -> dict:
+    def stage(
+        self, new_data: DataFrame, affected_buckets: list[int], count_by: str | None = None
+    ) -> dict:
         """Write the NEXT version's data files without publishing a manifest.
 
         Returns a staging handle for ``commit(..., staged=...)``. Lets a
@@ -245,7 +262,7 @@ class LakeTable:
         on the laned sf0.1 replay (16.2/18.7 vs 15.6/16.3 s interleaved):
         the extra adaptive stage barrier costs more than the small tasks
         it coalesces away when many concurrent microbatch jobs share the
-        scheduler."""
+        scheduler. ``count_by``: see ``_scan_staged``."""
         last = self.last_commit()
         version = (last.version + 1) if last else 1
         rel_dir = os.path.join("data", f"v{version}")
@@ -254,19 +271,10 @@ class LakeTable:
             max(len(affected_buckets), 1), F.col(BUCKET_COL)
         )
         df.write.partitionBy(_PART_COL).mode("overwrite").parquet(out_dir)
-        written: set[int] = set()
-        rows_per_bucket: dict[int, int] = {}
-        if os.path.isdir(out_dir):
-            for name in os.listdir(out_dir):
-                if name.startswith(f"{_PART_COL}="):
-                    b = int(name.split("=", 1)[1])
-                    written.add(b)
-                    rows_per_bucket[b] = _footer_row_count(os.path.join(out_dir, name))
         return {
             "version": version,
             "rel_dir": rel_dir,
-            "written_buckets": written,
-            "rows_per_bucket": rows_per_bucket,
+            **_scan_staged(out_dir, count_by),
             "schema_json": json.loads(new_data.schema.json()),
         }
 
@@ -317,24 +325,18 @@ class LakeTable:
         def _adopt(tag: str, table: "LakeTable", version: int, rel_dir: str) -> dict:
             out_dir = os.path.join(table.path, rel_dir)
             src = os.path.join(tmp, f"{dest}={tag}")
-            written: set[int] = set()
-            rows_per_bucket: dict[int, int] = {}
-            if os.path.isdir(src):
+            scan = _scan_staged(src)
+            if scan["written_buckets"]:
                 os.makedirs(out_dir, exist_ok=True)
-                for name in os.listdir(src):
-                    if not name.startswith(f"{_PART_COL}="):
-                        continue
-                    b = int(name.split("=", 1)[1])
-                    tgt = os.path.join(out_dir, name)
-                    shutil.rmtree(tgt, ignore_errors=True)  # retry overwrite
-                    os.rename(os.path.join(src, name), tgt)
-                    written.add(b)
-                    rows_per_bucket[b] = _footer_row_count(tgt)
+            for b in scan["written_buckets"]:
+                name = f"{_PART_COL}={b}"
+                tgt = os.path.join(out_dir, name)
+                shutil.rmtree(tgt, ignore_errors=True)  # retry overwrite
+                os.rename(os.path.join(src, name), tgt)
             return {
                 "version": version,
                 "rel_dir": rel_dir,
-                "written_buckets": written,
-                "rows_per_bucket": rows_per_bucket,
+                **scan,
                 "schema_json": schema_json,
             }
 

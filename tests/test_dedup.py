@@ -1,7 +1,18 @@
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pyelt_spark.operators.dedup import latest_per_key, latest_per_key_window
+from pyelt_spark.operators.dedup import _tiebreak, latest_per_key
 from pyelt_spark.sources.events import transcript_change_events
+
+
+def latest_per_key_window(df, keys, order_by):
+    """The textbook ``row_number() == 1`` window with ``latest_per_key``'s
+    tiebreak: correct but skew-prone (every event of a hot key lands in
+    one task), so it is the cross-check, not the engine's path."""
+    w = Window.partitionBy(*keys).orderBy(
+        *[F.col(c).desc() for c in order_by], _tiebreak(df, order_by, None).desc()
+    )
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
 
 
 def test_latest_per_key_agrees_with_window(spark):

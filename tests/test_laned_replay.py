@@ -132,6 +132,60 @@ def test_laned_sat_history_compaction_matches_serial(spark, tmp_path, monkeypatc
         ev.unpersist()
 
 
+def test_laned_replay_cuts_chunked_windows(spark, tmp_path, monkeypatch):
+    """Over the row budget the volume gate cuts each lane's batches, in
+    order, into consecutive windows whose probed input rows fit it: with
+    a budget of about 2.5 batches the sat and hub lanes (one input row per
+    event) run windows of two, the sparser link lane longer ones. Every
+    batch reports its own window, and hub, sat and link state equal the
+    serial ``apply_batch`` loop."""
+    import math
+
+    import pyelt_spark.plans.pipe as pipe_mod
+
+    ev = transcript_change_events(spark, 800, batch_size=100, seed=5).persist()
+    try:
+        counts = dict(sorted((int(r[0]), r[1]) for r in ev.groupBy("batch_id").count().collect()))
+        cores = spark.sparkContext.defaultParallelism
+        per_core = math.ceil(250 / cores)
+        monkeypatch.setattr(pipe_mod, "WINDOW_ROW_BUDGET_PER_CORE", per_core)
+        # the sat's expected cut: greedy over the per-batch event counts
+        want, total = [], 0
+        for b, n in counts.items():
+            if want and total + n <= per_core * cores:
+                want[-1].append(b)
+                total += n
+            else:
+                want.append([b])
+                total = n
+        assert len(want) > 1 and all(len(w) > 1 for w in want)
+
+        chunked = TranscriptVault(spark, str(tmp_path / "chunked"), num_buckets=4)
+        out = {o["batch_id"]: o for o in MicrobatchRunner(chunked).replay(ev)}
+        for w in want:
+            for b in w:
+                # the hub, like the sat, takes one input row per event
+                assert out[b]["sat"]["window"] == out[b]["hub"]["window"] == [w[0], w[-1]], b
+        # the link's windows: consecutive, tiling the batch ids, each batch
+        # in its own, and no more of them than the sat's
+        wins = sorted({tuple(o["link"]["window"]) for o in out.values()})
+        assert [b for lo, hi in wins for b in range(lo, hi + 1)] == list(counts)
+        assert all(lo <= b <= hi for b, o in out.items() for lo, hi in [o["link"]["window"]])
+        assert len(wins) <= len(want)
+
+        serial = TranscriptVault(spark, str(tmp_path / "serial"), num_buckets=4)
+        for b in counts:
+            serial.apply_batch(ev.filter(f"batch_id = {b}"), b)
+        for tbl in ("hub", "link"):
+            a, b = getattr(chunked, tbl).read(), getattr(serial, tbl).read()
+            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, tbl
+        a = chunked.sat.read().drop("_bucket")
+        b = serial.sat.read().drop("_bucket")
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    finally:
+        ev.unpersist()
+
+
 def _pipe_events(spark):
     rows = [
         # batch 0: two patients, one handeling+link, one valueset code

@@ -2,10 +2,11 @@
 a multi-batch application must be BYTE-IDENTICAL to applying the same
 batches one at a time — state (head, hist, hub, link) and per-batch
 metrics alike — and must skip committed ids on resume. ``apply_batch`` is
-itself a window of one, so the sat cases also check the window against
-independent references: the pure-Python simulators of
+itself a window of one on both merges, so the window is also checked
+against independent references: for sats the pure-Python simulators of
 tests/test_random_differential.py, on adversarial (late, out-of-order,
-tombstone-churning) streams."""
+tombstone-churning) streams; for hubs the first-batch-wins fold
+``_hub_fold``."""
 
 import datetime as dt
 import random
@@ -231,6 +232,105 @@ def test_window_hub_and_link_match_sequential(spark, tmp_path):
             assert seq_new[b]["new_keys"] == win_new[b]["new_keys"], b
     finally:
         ev.unpersist()
+
+
+def _hub_fold(rows, batch_ids, hub_type, state=None):
+    """Pure-Python first-batch-wins reference for an insert-only hub with
+    a ``label`` carry column and a ``_hub_type`` subtype column: batch by
+    batch, a key not registered yet takes from that batch's rows of the
+    key the least non-null ``ts``/``label``/``_hub_type``. Returns the
+    registry ``{k: (type, label, _insert_ts, _runid)}`` and the new keys
+    per batch."""
+    state = dict(state or {})
+    new = {b: 0 for b in batch_ids}
+    for b in batch_ids:
+        mine = [r for r in rows if r["batch_id"] == b and r["k"] is not None]
+        for k in sorted({r["k"] for r in mine} - set(state)):
+            rs = [r for r in mine if r["k"] == k]
+
+            def least(c):
+                return min((r[c] for r in rs if r[c] is not None), default=None)
+
+            state[k] = (least("_hub_type") or hub_type, least("label"), least("ts"), b)
+            new[b] += 1
+    return state, new
+
+
+def _hub_rows(t):
+    return {
+        r["k"]: (r["type"], r["label"], r["_insert_ts"], r["_runid"])
+        for r in t.read().collect()
+    }
+
+
+def test_window_hub_matches_first_batch_wins_fold(spark, tmp_path):
+    """The one hub merge against an independent reference (``_hub_fold``)
+    on a multi-batch stream with null ``ts`` and carry values, subtype
+    rows and null business keys — first as a window whose first two
+    batches were already committed (the resumed window must skip them and
+    register only what they left new), then batch by batch."""
+    rng = random.Random(7)
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        {
+            "k": None if rng.random() < 0.05 else f"k{rng.randrange(60)}",
+            "ts": None if rng.random() < 0.2 else t0 + dt.timedelta(minutes=rng.randrange(500)),
+            "label": None if rng.random() < 0.3 else rng.choice("abcde"),
+            "_hub_type": rng.choice([None, None, "sub_a", "sub_b"]),
+            "batch_id": rng.randrange(5),
+        }
+        for _ in range(400)
+    ]
+    df = spark.createDataFrame(
+        rows, "k string, ts timestamp, label string, _hub_type string, batch_id int"
+    )
+    hm = HubMerge(business_keys=["k"], hub_type="thing", carry_cols=["label"])
+    ids = [0, 1, 2, 3, 4]
+    want, want_new = _hub_fold(rows, ids, "thing")
+
+    t_win = LakeTable(spark, str(tmp_path / "win"), 4)
+    first = hm.apply_batches(t_win, df, "batch_id", [0, 1])
+    res = hm.apply_batches(t_win, df, "batch_id", ids)
+    assert res[0] == {"skipped_duplicate_batch": 0}
+    assert res[1] == {"skipped_duplicate_batch": 1}
+    for b in (0, 1):
+        assert first[b]["new_keys"] == want_new[b] and first[b]["window"] == [0, 1]
+    for b in (2, 3, 4):
+        assert res[b]["new_keys"] == want_new[b] and res[b]["window"] == [2, 4]
+    assert _hub_rows(t_win) == want
+
+    t_seq = LakeTable(spark, str(tmp_path / "seq"), 4)
+    for b in ids:
+        out = hm.apply_batch(t_seq, df.filter(F.col("batch_id") == b).drop("batch_id"), b)
+        assert out["new_keys"] == want_new[b] and out["window"] == [b, b]
+    assert _hub_rows(t_seq) == want
+
+
+def test_window_hub_counts_zero_new_keys(spark, tmp_path):
+    """A batch whose keys all exist already (the anti-join empties at
+    runtime) and a batch that is empty at runtime (every business key
+    null) each register 0 new keys without error, alone and in one
+    window, on a loaded and on an empty hub."""
+    ts = dt.datetime(2024, 1, 1)
+
+    def batch(keys, b):
+        return spark.createDataFrame(
+            [(k, ts, b) for k in keys], "k string, ts timestamp, batch_id int"
+        )
+
+    hm = HubMerge(business_keys=["k"], hub_type="thing")
+    empty_first = LakeTable(spark, str(tmp_path / "e"), 4)
+    assert hm.apply_batch(empty_first, batch([None], 0), 0)["new_keys"] == 0
+    t = LakeTable(spark, str(tmp_path / "h"), 4)
+    assert hm.apply_batch(t, batch(["k1", "k2"], 0), 0)["new_keys"] == 2
+    assert hm.apply_batch(t, batch(["k2", "k1", "k1"], 1), 1)["new_keys"] == 0
+    assert hm.apply_batch(t, batch([None, None], 2), 2)["new_keys"] == 0
+    res = hm.apply_batches(
+        t, batch(["k1"], 3).unionByName(batch([None], 4)), "batch_id", [3, 4]
+    )
+    assert [res[b]["new_keys"] for b in (3, 4)] == [0, 0]
+    assert t.committed_batch_ids() == {0, 1, 2, 3, 4}
+    assert sorted(r["k"] for r in t.read().collect()) == ["k1", "k2"]
 
 
 def test_window_matches_sequential_across_schema_evolution(spark, tmp_path):
