@@ -31,12 +31,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from pyelt_spark.functions.text import fingerprint, shingles
+from pyelt_spark.functions.text import fingerprint
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -172,26 +172,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), F.col("jaccard"))
-    )
-
-
-def minhash_signature(text_col: str | Column, num_perm: int = 12, n: int = 5) -> Column:
-    """MinHash signature, engine-portable and cheap: each shingle is hashed
-    exactly TWICE (sha256(s) ++ sha256(s||'#') → 128 hex chars); permutation
-    i takes the lexicographic MIN over a 10-hex-char (40-bit) slice at
-    offset 10*i. One hash pass instead of num_perm passes — at 10^9 shingles
-    this is the difference between 2 and num_perm sha evaluations per
-    shingle. num_perm <= 12 with this layout."""
-    assert num_perm <= 12, "10-hex slices of 128 hex chars support <= 12 perms"
-    sh = shingles(text_col, n)
-    hx = F.transform(
-        sh, lambda s: F.concat(F.sha2(s, 256), F.sha2(F.concat(s, F.lit("#")), 256))
-    )
-    return F.array(
-        *[
-            F.array_min(F.transform(hx, lambda h: F.substring(h, 1 + 10 * i, 10)))
-            for i in range(num_perm)
-        ]
     )
 
 

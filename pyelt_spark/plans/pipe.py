@@ -18,15 +18,16 @@ microbatch. Differences are Spark-first, not semantic:
 * hub / sat / link merges for one part run CONCURRENTLY (disjoint tables,
   one shared deduped batch) — the reference's serial FK-writeback loop
   does not exist because surrogate keys are hashes. Without hooks,
-  validations or view promotions no part boundary is observable, and
-  every sor-fed merge of a batch runs concurrently.
+  validations or view promotions no part boundary is observable, so
+  every sor-fed table runs its own lane.
 * every merge is idempotent per (table, batch_id), so a crash anywhere
   inside ``run`` resumes exactly-once by re-running the batch (tested by
   the torn-vault tests).
 
-``Pipe.run`` (one batch) and ``Pipe.replay`` (a bounded stream, per-table
-lanes) are the engine's one commit and replay path: the transcript vault's
-``apply_batch`` and ``MicrobatchRunner.replay`` delegate to them.
+``Pipe.replay`` (a bounded stream) and ``Pipe.run`` (one batch — on a
+laneable pipe a replay of one batch) share one probe, one skip rule and
+one lane loop (``_replay_laned``); the transcript vault's ``apply_batch``
+and ``MicrobatchRunner.replay`` delegate to them.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyelt_spark.operators.hubs import HubMerge, LinkMerge
-from pyelt_spark.operators.scd2 import Scd2Merge, Scd2Table
+from pyelt_spark.operators.scd2 import _ONE, Scd2Merge, Scd2Table
 from pyelt_spark.plans.domain import (
     DynamicLinkReference,
     HubEntity,
@@ -371,17 +372,20 @@ class Pipe:
         rewrites it with the per-table metrics rollup. A crash mid-run
         leaves the record status='running' — torn-run forensics in one
         file instead of N table manifests. Re-running a batch appends a
-        new attempt (reference: same-day runid +0.01)."""
+        new attempt (reference: same-day runid +0.01) only when some table
+        still needs it: the laned path skips a fully committed or provably
+        empty batch whole, while the serial part loop records every run.
+        Attempts are numbered by probing this batch id's record names
+        upward, so the cost does not grow with the registry."""
         import datetime as _dt
         import json as _json
 
         from pyelt_spark import __version__
 
         d = self._runs_dir()
-        attempt = sum(
-            1 for n in os.listdir(d) if n.startswith(f"{batch_id:012d}_")
-        )
-        path = os.path.join(d, f"{batch_id:012d}_{attempt:03d}.json")
+        attempt = 0
+        while os.path.exists(path := os.path.join(d, f"{batch_id:012d}_{attempt:03d}.json")):
+            attempt += 1
         rec = {
             "run_id": batch_id,
             "attempt": attempt,
@@ -488,33 +492,44 @@ class Pipe:
         batch: DataFrame | None,
         batch_id: int,
         parts: list[str] | None = None,
-        affected: dict[str, list[int]] | None = None,
     ) -> dict[str, Any]:
         """Apply one microbatch through the part sequence (pipeline.py:657:
         ``run(parts=['sor','valuesets','hubs','links','views','viewlinks'])``).
-        ``batch`` may be None when only view parts run. ``affected``
-        optionally maps sor-fed table name → precomputed bucket superset
-        (see ``replay`` — removes the per-table bucket-discovery job; ``[]``
-        skips a provably empty merge).
+        ``batch`` may be None when only view parts run.
 
-        Where lanes apply (``_laneable``) no hook can observe a part
-        boundary and every merge reads only the batch and its own table,
-        so the valueset, hub/sat and link merges are submitted together."""
+        Where lanes apply (``_laneable``) a batch is a replay of one batch:
+        it gets a literal batch column, ONE ``_probe`` lists every sor-fed
+        table's buckets (``[]``: the batch feeds the table nothing), and
+        ``_replay_laned`` applies it — the same skip rule, run record and
+        per-table maintenance as a catch-up. Each table reports
+        ``skipped_duplicate_batch`` or ``skipped_empty_batch`` where it has
+        nothing to do. ``batch=None`` and non-laneable pipes (hooks,
+        validations, views) run the serial part loop (``_run_parts``)."""
         parts = ALL_PARTS if parts is None else parts
-        affected = affected or {}
+        if batch is None or not self._laneable(parts):
+            return self._run_parts(batch, batch_id, parts, {})
+        # each merge re-scans the batch: caching it for all merges to share
+        # measured a LOSS at 16M events on pinned local[8] (153 s → 174 s
+        # replay) — columnar re-scans are cheap, a deserialized cache costs
+        # fill time and GC pressure
+        ev = batch.withColumn(_ONE, F.lit(batch_id).cast("long"))
+        targets = self._sor_targets(ev, parts, _ONE)
+        _, affected, rows_per = self._probe(ev, _ONE, targets, [batch_id])
+        return self._replay_laned(_ONE, targets, [batch_id], affected, rows_per, parts)[0]
+
+    def _run_parts(
+        self,
+        batch: DataFrame | None,
+        batch_id: int,
+        parts: list[str],
+        affected: dict[str, list[int]],
+    ) -> dict[str, Any]:
+        """The serial part loop: one run record, then each part's merges
+        (run concurrently within the part) between its hooks. ``affected``
+        maps sor-fed table name → the replay probe's bucket list (``[]``
+        skips a provably empty merge; a missing name discovers its own)."""
         out: dict[str, Any] = {"batch_id": batch_id, "parts": list(parts)}
         run_rec = self._runs_start(batch_id, parts)
-        if self._laneable(parts):
-            # each merge re-scans the batch: caching it for all merges to
-            # share measured a LOSS at 16M events on pinned local[8] (153 s →
-            # 174 s replay) — columnar re-scans are cheap, a deserialized
-            # cache costs fill time and GC pressure
-            if batch is not None:
-                jobs = self._jobs(self._sor_targets(batch, parts), batch_id, affected)
-                out.update(self._run_jobs(jobs))
-            self._runs_finish(run_rec, out)
-            return out
-
         staged = batch
         if "sor" in parts and batch is not None:
             self._fire("before_sor", batch, batch_id)
@@ -533,9 +548,11 @@ class Pipe:
             self._fire(f"before_{part}", staged, batch_id)
             # precomputed buckets describe the SOR batch, not view output —
             # view promotions always discover their own buckets
-            targets = self._part_targets(part, staged, batch_id)
-            jobs = self._jobs(targets, batch_id, {} if view else affected)
-            out.update(self._run_jobs(jobs))
+            aff = {} if view else affected
+            out.update(self._run_jobs([
+                (t.name, self._job(t, batch_id, aff.get(t.name)))
+                for t in self._part_targets(part, staged, batch_id)
+            ]))
             self._fire(f"after_{part}", staged, batch_id)
 
         self._runs_finish(run_rec, out)
@@ -704,19 +721,12 @@ class Pipe:
 
     # ----------------------------------------------------------------- jobs
 
-    def _jobs(
-        self,
-        targets: list[_Target],
-        batch_id: int,
-        affected: dict[str, list[int]],
-    ) -> list[tuple[str, Callable[[], dict]]]:
-        return [(t.name, self._job(t, batch_id, affected.get(t.name))) for t in targets]
-
     def _job(self, t: _Target, batch_id: int, aff: list[int] | None) -> Callable[[], dict]:
-        """One target's merge of one batch. ``aff == []``: the replay probe
-        proved the batch feeds the table no rows, so the merge is skipped
-        with zero Spark jobs (None = unknown → the merge discovers its own
-        buckets)."""
+        """One target's merge of one batch on the serial part loop, and a
+        snapshot sat's per-batch merge in a lane. ``aff == []``: the replay
+        probe proved the batch feeds the table no rows, so the merge is
+        skipped with zero Spark jobs (None = unknown → the merge discovers
+        its own buckets)."""
         if t.snapshot:
             # NEVER skip a snapshot sat on an empty batch: an empty
             # snapshot claims completeness and closes every row
@@ -800,11 +810,12 @@ class Pipe:
 
         Where lanes apply (``_laneable``) the replay runs per-table lanes
         (``_replay_laned``); otherwise it falls back to the serial
-        per-batch ``run`` loop, compacting after every batch. ``events`` is
-        not persisted on either path: on the serial path, which re-reads
-        it once per batch per mapping, a persisted stream was slower in 4
-        of 4 interleaved pairs (sf0.01 domain replay, ``local[4]``: median
-        12.6 s persisted against 12.1 s re-read)."""
+        per-batch part loop (``_run_parts``), compacting after every
+        batch. ``events`` is not persisted on either path: on the serial
+        path, which re-reads it once per batch per mapping, a persisted
+        stream was slower in 4 of 4 interleaved pairs (sf0.01 domain
+        replay, ``local[4]``: median 12.6 s persisted against 12.1 s
+        re-read)."""
         parts = ALL_PARTS if parts is None else parts
         targets = self._sor_targets(events, parts, batch_col)
         ids, affected, rows_per = self._probe(events, batch_col, targets)
@@ -812,18 +823,19 @@ class Pipe:
             return self._replay_laned(batch_col, targets, ids, affected, rows_per, parts)
         out = []
         for b in ids:
-            out.append(
-                self.run(
-                    events.filter(F.col(batch_col) == b), b, parts=parts, affected=affected[b]
-                )
-            )
+            out.append(self._run_parts(events.filter(F.col(batch_col) == b), b, parts, affected[b]))
             self.maintain()
         return out
 
     def _probe(
-        self, events: DataFrame, batch_col: str, targets: list[_Target]
+        self,
+        events: DataFrame,
+        batch_col: str,
+        targets: list[_Target],
+        ids: list[int] | None = None,
     ) -> tuple[list[int], dict[int, dict[str, list[int]]], dict[tuple[int, str], int]]:
-        """One aggregation over ONE scan of the stream: the batch ids, each
+        """One aggregation over ONE scan of the stream: the batch ids (or
+        the caller's ``ids``, so an empty batch still reports), each
         batch's bucket list per probed table (``affected[b][table]``; ``[]``
         proves an empty input) and each (batch, table)'s input row count
         for the window volume gate. Each feed of a probed table becomes one
@@ -897,7 +909,8 @@ class Pipe:
             .agg(F.count("*").alias("n"))
             .collect()
         )
-        ids = sorted({int(r["_b"]) for r in rows})
+        if ids is None:
+            ids = sorted({int(r["_b"]) for r in rows})
         affected = {b: {t.name: [] for t in probed} for b in ids}
         rows_per: dict[tuple[int, str], int] = {}
         for r in rows:
@@ -915,7 +928,7 @@ class Pipe:
         read OTHER tables' post-batch state, hooks observe part
         boundaries, and validations thread a quarantine stage through the
         batch — all three force the per-batch part order, so their
-        presence falls back to the serial per-batch ``run`` loop."""
+        presence falls back to the serial per-batch part loop (``_run_parts``)."""
         wanted = set(ALL_PARTS if parts is None else parts)
         has_views = any(
             isinstance(m, (EntityViewToEntityMapping, EntityViewToLinkMapping))
@@ -946,22 +959,28 @@ class Pipe:
 
         Resume: a batch that some table has committed and every other
         table has committed or provably gets nothing from is skipped
-        whole — no lane work, no run record. A batch no table committed
-        runs, so a batch that feeds nothing still leaves its run record
-        (the pipe-wide batch-id high-water mark, ``EntityData``). Each
-        merge stays individually idempotent per (table, batch_id), so a
-        crash — which can leave DIFFERENT tables at different batches —
-        still resumes exactly-once by re-running the replay. Run-registry
+        whole — no lane work, no run record; its result still carries one
+        ``skipped_duplicate_batch`` or ``skipped_empty_batch`` entry per
+        table. A batch no table committed runs, so a batch that feeds
+        nothing still leaves its run record (the pipe-wide batch-id
+        high-water mark, ``EntityData``). Each merge stays individually
+        idempotent per (table, batch_id), so a crash — which can leave
+        DIFFERENT tables at different batches — still resumes
+        exactly-once by re-running the replay. Run-registry
         records are started per pending batch up front and finished as
         the outputs assemble; a crash leaves every unfinished batch
         'running' (torn-run forensics unchanged)."""
         committed = {t.name: t.table.committed_batch_ids() for t in targets}
-        outs: dict[int, dict[str, Any]] = {
-            b: {"batch_id": b, "skipped_duplicate_batch": b}
-            for b in ids
-            if any(b in committed[t.name] for t in targets)
-            and all(b in committed[t.name] or affected[b].get(t.name) == [] for t in targets)
-        }
+        outs: dict[int, dict[str, Any]] = {}
+        for b in ids:
+            done = {
+                t.name: {"skipped_duplicate_batch": b} if b in committed[t.name]
+                else {"skipped_empty_batch": b}
+                for t in targets
+                if b in committed[t.name] or affected[b].get(t.name) == []
+            }
+            if len(done) == len(targets) and any(b in c for c in committed.values()):
+                outs[b] = {"batch_id": b, "skipped_duplicate_batch": b, **done}
         pending = [b for b in ids if b not in outs]
         if not pending:
             return [outs[b] for b in ids]

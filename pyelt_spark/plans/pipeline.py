@@ -133,12 +133,11 @@ class TranscriptVault:
         return {names.get(k, k): v for k, v in out.items()}
 
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict[str, Any]:
-        """One microbatch through ``Pipe.run``: the hub, sat and link merges
-        run concurrently, then small-file maintenance. Idempotent per
-        batch_id on every table (exactly-once replay)."""
-        out = self._pipe_for(events).run(events, batch_id)
-        self.maintain()
-        return self._table_keys(out)
+        """One microbatch through ``Pipe.run``, a laned replay of one batch:
+        the hub, sat and link lanes run concurrently and each compacts its
+        own table after its merge. Idempotent per batch_id on every table
+        (exactly-once replay)."""
+        return self._table_keys(self._pipe_for(events).run(events, batch_id))
 
     def maintain(self, max_dirs_per_bucket: int = 16) -> None:
         """Small-file maintenance of the hub, link and sat (``Pipe.maintain``)."""

@@ -432,17 +432,6 @@ class LakeTable:
                 self._commits_cache.append(commit)
         return commit
 
-    def init_schema(self, schema: T.StructType, recipe: HashRecipe | None = None) -> None:
-        """Bootstrap an empty table (first-load fast path, etl.py:233-278)."""
-        if self.last_commit() is None:
-            self.commit(
-                new_data=self.spark.createDataFrame([], schema),
-                affected_buckets=[],
-                batch_id=None,
-                recipe=recipe,
-                metrics={"bootstrap": True},
-            )
-
     # ------------------------------------------------------------ maintenance
 
     def compact_if_crowded(self, max_dirs_per_bucket: int = 16) -> None:

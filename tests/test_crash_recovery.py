@@ -125,14 +125,15 @@ def test_vault_crash_with_partial_table_commits(spark, tmp_path):
     runner = MicrobatchRunner(vault)
     runner.replay(ev.filter("batch_id = 0"))
 
-    # crash during batch 1: link merge dies AFTER hub+sat committed
-    orig = vault.link_merge.apply_batch
+    # crash during batch 1: link merge dies AFTER hub+sat committed (a
+    # commit runs the link lane's window call, ``apply_batches``)
     def boom(*a, **k):
         raise RuntimeError("injected link crash")
+    vault.link_merge.apply_batches = boom
     vault.link_merge.apply_batch = boom
     with pytest.raises(Exception):
         vault.apply_batch(ev.filter("batch_id = 1"), 1)
-    vault.link_merge.apply_batch = orig
+    del vault.link_merge.apply_batches, vault.link_merge.apply_batch
     assert 1 in vault.sat.committed_batch_ids()
     assert 1 not in vault.link.committed_batch_ids()
 

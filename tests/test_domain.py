@@ -675,6 +675,13 @@ def test_pipe_skips_provably_empty_merges(spark, tmp_path):
     assert pipe.sat_table("patient_sat").current().count() == 1
 
 
+# every table ``_mappings()`` compiles
+_TABLES = [
+    "patient_hub", "handeling_hub", "patient_sat", "patient_sat_adres",
+    "handeling_sat", "patient_handeling_link", "valueset_adres_type",
+]
+
+
 def test_pipe_rereplay_skips_every_batch(spark, tmp_path):
     """Resume skip: re-running replay over a fully replayed pipe skips each
     batch whole — ``skipped_duplicate_batch`` per batch, no lane work and
@@ -698,7 +705,20 @@ def test_pipe_rereplay_skips_every_batch(spark, tmp_path):
     assert n_runs == 3
 
     again = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4).replay(ev)
-    assert again == [{"batch_id": b, "skipped_duplicate_batch": b} for b in (0, 1, 2)]
+    # each table still reports: committed, or proven empty by the probe
+    empty = {
+        0: set(),
+        1: {"handeling_hub", "handeling_sat", "patient_handeling_link", "patient_sat_adres"},
+        2: {"patient_sat_adres"},
+    }
+
+    def skipped(b, t):
+        return {"skipped_empty_batch": b} if t in empty[b] else {"skipped_duplicate_batch": b}
+
+    assert again == [
+        {"batch_id": b, "skipped_duplicate_batch": b, **{t: skipped(b, t) for t in _TABLES}}
+        for b in (0, 1, 2)
+    ]
     assert len(pipe.runs_log()) == n_runs
 
 
@@ -726,3 +746,82 @@ def test_pipe_replay_records_batch_that_feeds_nothing(spark, tmp_path):
     data = EntityData(pipe, Handeling)
     data.new(handeling_id="h2").set_sat("default", naam="handeling h2")
     assert data.save()["batch_id"] == 2
+
+
+# --------------------------------------------------------------------------
+# Pipe.run on a laneable pipe is a replay of one batch
+# --------------------------------------------------------------------------
+
+
+def test_pipe_run_skips_entity_the_batch_feeds_nothing(spark, tmp_path):
+    """``run`` probes its batch like a replay: an entity the batch feeds no
+    rows skips its hub and sat merges and publishes no manifest."""
+    pipe = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4)
+    b1 = spark.createDataFrame([_ev(1, "p1", "Jan"), _ev(2, "p2", "Piet")], _SCHEMA)
+    out = pipe.run(b1, batch_id=1)
+    assert out["patient_hub"]["new_keys"] == 2
+    assert out["patient_sat"]["inserted"] == 2
+    assert out["handeling_hub"] == {"skipped_empty_batch": 1}
+    assert out["handeling_sat"] == {"skipped_empty_batch": 1}
+    assert out["patient_handeling_link"] == {"skipped_empty_batch": 1}
+    assert pipe.hub_table(Handeling).last_commit() is None
+    assert pipe.sat_table(Handeling.Default).last_commit() is None
+    assert pipe.runs_log()[0]["tables"]["handeling_hub"] == {"skipped_empty_batch": 1}
+
+
+def test_pipe_run_delete_only_batch_skips_hub(spark, tmp_path):
+    """A hub takes only upserts, so a delete-only batch provably feeds it
+    nothing: ``run`` skips the hub while the sat closes the key."""
+    pipe = Pipe(spark, str(tmp_path / "dv"), [SorToEntityMapping(entity=Patient)], num_buckets=4)
+    pipe.run(spark.createDataFrame([_ev(1, "p1", "Jan")], _SCHEMA), batch_id=1)
+    out = pipe.run(spark.createDataFrame([_ev(2, "p1", None, op="D")], _SCHEMA), batch_id=2)
+    assert out["patient_hub"] == {"skipped_empty_batch": 2}
+    assert out["patient_sat"]["deleted"] == 1
+    assert pipe.hub_table(Patient).committed_batch_ids() == {1}
+    assert pipe.sat_table(Patient.Default).current().count() == 0
+
+
+def test_pipe_run_redelivered_batch_adds_no_run_record(spark, tmp_path):
+    """Re-delivering a fully committed batch through ``run`` is skipped
+    whole, as in a replay: every table reports its skip and the run
+    registry gains no attempt."""
+    pipe = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4)
+    b1 = spark.createDataFrame([_ev(1, "p1", "Jan", handeling="h1")], _SCHEMA)
+    pipe.run(b1, batch_id=1)
+    assert len(pipe.runs_log()) == 1
+    out = Pipe(spark, str(tmp_path / "dv"), _mappings(), num_buckets=4).run(b1, batch_id=1)
+    assert out["skipped_duplicate_batch"] == 1
+    assert out["patient_sat_adres"] == {"skipped_empty_batch": 1}
+    assert all(
+        out[t] == {"skipped_duplicate_batch": 1} for t in _TABLES if t != "patient_sat_adres"
+    )
+    assert len(pipe.runs_log()) == 1
+
+
+def test_pipe_run_matches_one_batch_replay(spark, tmp_path):
+    """``run`` of a batch and ``replay`` of the same rows as one batch land
+    identical results and identical state in every table."""
+    batches = {
+        1: [
+            _ev(1, "p1", "Jan", straat="Dam 1", adres_type="postadres"),
+            _ev(2, "p2", "Piet", handeling="h1", dyn_type="locatie", dyn_key="loc9"),
+        ],
+        2: [
+            _ev(10, "p1", "Jan Jansen"),
+            _ev(11, "p2", None, op="D"),
+            _ev(12, "p3", "Kees", handeling="h2", straat="Kade 3", adres_type="bezoekadres"),
+        ],
+    }
+    ran = Pipe(spark, str(tmp_path / "run"), _mappings(), num_buckets=4)
+    replayed = Pipe(spark, str(tmp_path / "replay"), _mappings(), num_buckets=4)
+    for b, rows in batches.items():
+        df = spark.createDataFrame(rows, _SCHEMA)
+        assert ran.run(df, batch_id=b) == replayed.replay(df.withColumn("batch_id", F.lit(b)))[0]
+    for a, b in (
+        *((ran.hubs[k], replayed.hubs[k]) for k in ran.hubs),
+        *((ran.links[k], replayed.links[k]) for k in ran.links),
+        *((ran.valuesets[k], replayed.valuesets[k]) for k in ran.valuesets),
+        *((ran.sats[k], replayed.sats[k]) for k in ran.sats),
+    ):
+        x, y = a.read(), b.read()
+        assert x.exceptAll(y).count() == 0 and y.exceptAll(x).count() == 0

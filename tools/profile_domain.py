@@ -23,38 +23,30 @@ t0_all = time.perf_counter()
 log = []
 
 
-def timed(cls, name):
-    orig = getattr(cls, name)
+def timed(cls, name, table=lambda self, a: a[0] if a else None):
+    """Log each call's wall time with the table it ran on (a merge's first
+    argument; ``table`` picks it for other methods)."""
+    orig = cls.__dict__[name]
 
     def wrap(self, *a, **k):
         t0 = time.perf_counter()
         out = orig(self, *a, **k)
         dt = time.perf_counter() - t0
-        tbl = getattr(a[0], "path", "?") if a else "?"
-        log.append((time.perf_counter() - t0_all, f"{cls.__name__}.{name}",
-                    os.path.basename(str(tbl)), round(dt, 2)))
+        tbl = "/".join(str(getattr(table(self, a), "path", "?")).split("/")[-2:])
+        log.append((time.perf_counter() - t0_all, f"{type(self).__name__}.{name}",
+                    tbl, round(dt, 2)))
         return out
 
     setattr(cls, name, wrap)
 
 
-timed(scd2.Scd2Merge, "apply_batch")
+# the lanes' merge entry points (LinkMerge inherits HubMerge's) and the
+# staged writes they end in
+timed(scd2.Scd2Merge, "apply_batches")
 timed(scd2.Scd2Merge, "prepare_batch")
-timed(hubs.HubMerge, "apply_batch")
-timed(hubs.LinkMerge, "apply_batch")
-
-orig_stage = lake.LakeTable.stage
-
-
-def stage_w(self, *a, **k):
-    t0 = time.perf_counter()
-    out = orig_stage(self, *a, **k)
-    log.append((time.perf_counter() - t0_all, "stage",
-                "/".join(self.path.split("/")[-2:]), round(time.perf_counter() - t0, 2)))
-    return out
-
-
-lake.LakeTable.stage = stage_w
+timed(hubs.HubMerge, "apply_batches")
+timed(lake.LakeTable, "stage", lambda self, a: self)
+timed(lake.LakeTable, "stage_tagged", lambda self, a: self)
 
 base = "/dev/shm" if os.path.isdir("/dev/shm") else None
 root = tempfile.mkdtemp(prefix="profdomain_", dir=base)
